@@ -10,6 +10,9 @@ floor-relative CPU gate per level, the N-anchored absolute gate that
 catches uniformly-poisoned 4N rounds, fallback when a whole level is
 rejected (record floor-relative best, never 0), and the >=1.0 clamp on
 the headline ratio (superlinear = contended N anchor, not a claim).
+The ``scaling_env`` fixture models the default 32-CPU host and pins every
+knob ``run_scaling`` reads from the environment, so these tests do not
+depend on the host's ``nproc`` or on the variables a test command exports.
 """
 
 from __future__ import annotations
@@ -28,9 +31,22 @@ import bench  # noqa: E402
 @pytest.fixture()
 def scaling_env(monkeypatch, tmp_path):
     """Isolate run_scaling: fake data cache (generation skipped), fast
-    budget knobs, and a place for tests to install a fake _replay_once."""
+    budget knobs, and a place for tests to install a fake _replay_once.
+    Models the default 32-CPU host (the scripted fakes answer
+    ``n_cpus == 32`` for the absolute tail) and pins every other knob
+    run_scaling reads from the environment to its documented default, so
+    neither ``SPARK_GRAFT_CPUS=$(nproc)`` nor a bench override leaks in."""
     monkeypatch.setattr(bench.tempfile, "gettempdir", lambda: str(tmp_path))
     monkeypatch.setattr(bench, "BENCH_TXNS", 31337)
+    monkeypatch.setattr(bench, "CPUS", 32)
+    monkeypatch.setattr(bench, "BENCH_N", 2)
+    monkeypatch.setattr(bench, "OCC_FLOOR", 0.85)
+    for var in (
+        "SPARK_GRAFT_BENCH_MIN_REPS",
+        "SPARK_GRAFT_BENCH_TAIL_GRACE_S",
+        "SPARK_GRAFT_BENCH_CLUSTER_LADDER",
+    ):
+        monkeypatch.delenv(var, raising=False)
     cache = tmp_path / "lmkc-benchdata-31337"
     cache.mkdir()
     (cache / "n_events.txt").write_text("1000000")
