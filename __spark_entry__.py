@@ -8,12 +8,14 @@ for the non-SQL-expressible CDC replay / LSH ANN / multimodal entries).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+# import the engine from this checkout, wherever it lives
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from logminer_kafka_connect_spark import entry_queries  # noqa: E402
 

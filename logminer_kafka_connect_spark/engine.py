@@ -39,7 +39,7 @@ class CdcEngine:
         spark: SparkSession,
         workdir: str,
         selectors=None,
-        n_buckets: int = 32,
+        n_buckets: int | None = None,
         schema: T.StructType = PAGES_SCHEMA,
         key_col: str = "url",
         schema_provider=None,
@@ -56,6 +56,11 @@ class CdcEngine:
         table_path = os.path.join(workdir, "pages_table")
         self.table = SnapshotTable(table_path, fs=fs)
         if not self.table.exists():
+            # n_buckets defaults to the session's parallelism: every
+            # copy-on-write commit rewrites one parquet file per touched
+            # bucket and shuffles into n_buckets partitions, so a bucket
+            # count above the core count only adds per-file write setup.
+            # An existing table keeps the count its manifest recorded.
             # stats_cols/sort_cols are opt-in: the stats pass adds one
             # narrow job per merge — analytics-read-heavy deployments
             # turn it on (file skipping on the replicated table), the
@@ -64,7 +69,8 @@ class CdcEngine:
             # merge-on-read (delta appends + compact()) for deployments
             # whose batches are small relative to bucket size.
             self.table = SnapshotTable.create(
-                table_path, schema, [key_col], n_buckets=n_buckets,
+                table_path, schema, [key_col],
+                n_buckets=n_buckets or spark.sparkContext.defaultParallelism,
                 stats_cols=stats_cols, sort_cols=sort_cols,
                 merge_mode=merge_mode, fs=fs,
             )
@@ -186,7 +192,7 @@ class MultiTableCdcEngine:
         spark: SparkSession,
         workdir: str,
         specs: list[TableSpec],
-        n_buckets: int = 32,
+        n_buckets: int | None = None,
         fs=None,
         schema_provider=None,
         salt_chunks: int | str | None = "auto",
@@ -204,8 +210,11 @@ class MultiTableCdcEngine:
             path = os.path.join(workdir, "tables", f"{spec.owner}.{spec.table}")
             t = SnapshotTable(path, fs=fs)
             if not t.exists():
+                # bucket count as in CdcEngine
                 t = SnapshotTable.create(
-                    path, spec.schema, [spec.key_col], n_buckets=n_buckets, fs=fs
+                    path, spec.schema, [spec.key_col],
+                    n_buckets=n_buckets or spark.sparkContext.defaultParallelism,
+                    fs=fs,
                 )
             self._tables[spec.table] = t
             bindings.append(TableBinding(spec.owner, spec.table, t, spec.key_col))

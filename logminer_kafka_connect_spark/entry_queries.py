@@ -1973,6 +1973,7 @@ def cdc_schema_evolution(spark, sf_dir):
     added column), (4) the dropped column is gone from the final read,
     and (5) the final state equals a twin table CREATED at the final
     schema and fed the equivalent batches — before returning rows."""
+    import shutil
     import tempfile
 
     from pyspark.sql import types as T
@@ -2003,76 +2004,80 @@ def cdc_schema_evolution(spark, sf_dir):
         )
 
     workdir = tempfile.mkdtemp(prefix="lmkc-ddl-")
-    table = SnapshotTable.create(f"{workdir}/docs", schema0, ["doc_id"], n_buckets=8)
-    table.overwrite(docs, batch_id="b0")
-    table.merge(spark, upd(docs, "lang", F.col("doc_id") % 7 == 1, "aa"), batch_id="b1")
-    v_pre_ddl = table.current_version()
+    try:
+        table = SnapshotTable.create(f"{workdir}/docs", schema0, ["doc_id"], n_buckets=8)
+        table.overwrite(docs, batch_id="b0")
+        table.merge(spark, upd(docs, "lang", F.col("doc_id") % 7 == 1, "aa"), batch_id="b1")
+        v_pre_ddl = table.current_version()
 
-    # DDL 1: ADD COLUMN with default — old files read the default.
-    table.add_column("quality", T.DoubleType(), default=0.5)
-    table.merge(
-        spark, upd(table.read(spark), "quality", F.col("doc_id") % 5 == 2, 0.9), batch_id="b2"
-    )
-    # DDL 2: RENAME — new name reads old bytes, no rewrite.
-    table.rename_column("lang", "language")
-    table.merge(
-        spark,
-        upd(table.read(spark), "language", F.col("doc_id") % 7 == 3, "bb"),
-        batch_id="b3",
-    )
-    # DDL 3: type WIDENING int -> long, then a value above int range.
-    table.alter_column_type("n_chars", T.LongType())
-    big = spark.createDataFrame(
-        [(10_000_000_001, "zz", 5_000_000_000, 0.1, "c")],
-        "doc_id long, language string, n_chars long, quality double, __op string",
-    ).withColumn(SET_COLS_COL, F.lit(None).cast("array<string>"))
-    table.merge(spark, big, batch_id="b4")
-    # DDL 4: DROP — metadata-only; time travel before it still reads it.
-    table.drop_column("quality")
+        # DDL 1: ADD COLUMN with default — old files read the default.
+        table.add_column("quality", T.DoubleType(), default=0.5)
+        table.merge(
+            spark, upd(table.read(spark), "quality", F.col("doc_id") % 5 == 2, 0.9), batch_id="b2"
+        )
+        # DDL 2: RENAME — new name reads old bytes, no rewrite.
+        table.rename_column("lang", "language")
+        table.merge(
+            spark,
+            upd(table.read(spark), "language", F.col("doc_id") % 7 == 3, "bb"),
+            batch_id="b3",
+        )
+        # DDL 3: type WIDENING int -> long, then a value above int range.
+        table.alter_column_type("n_chars", T.LongType())
+        big = spark.createDataFrame(
+            [(10_000_000_001, "zz", 5_000_000_000, 0.1, "c")],
+            "doc_id long, language string, n_chars long, quality double, __op string",
+        ).withColumn(SET_COLS_COL, F.lit(None).cast("array<string>"))
+        table.merge(spark, big, batch_id="b4")
+        # DDL 4: DROP — metadata-only; time travel before it still reads it.
+        table.drop_column("quality")
 
-    final = table.read(spark)
-    if "quality" in final.columns:
-        raise AssertionError("dropped column still visible in the final read")
-    if final.filter(F.col("n_chars") == 5_000_000_000).count() != 1:
-        raise AssertionError("post-widen long value did not round-trip")
-    n_renamed = final.filter((F.col("doc_id") % 7 == 1) & (F.col("language") == "aa")).count()
-    if n_renamed != docs.filter(F.col("doc_id") % 7 == 1).count():
-        raise AssertionError("renamed column lost pre-rename bytes")
-    old = table.read(spark, version=v_pre_ddl)
-    if set(old.columns) != {"doc_id", "lang", "n_chars"} or dict(old.dtypes)["n_chars"] != "int":
-        raise AssertionError(f"time travel lost the pre-DDL schema: {old.dtypes}")
+        final = table.read(spark)
+        if "quality" in final.columns:
+            raise AssertionError("dropped column still visible in the final read")
+        if final.filter(F.col("n_chars") == 5_000_000_000).count() != 1:
+            raise AssertionError("post-widen long value did not round-trip")
+        n_renamed = final.filter((F.col("doc_id") % 7 == 1) & (F.col("language") == "aa")).count()
+        if n_renamed != docs.filter(F.col("doc_id") % 7 == 1).count():
+            raise AssertionError("renamed column lost pre-rename bytes")
+        old = table.read(spark, version=v_pre_ddl)
+        if set(old.columns) != {"doc_id", "lang", "n_chars"} or dict(old.dtypes)["n_chars"] != "int":
+            raise AssertionError(f"time travel lost the pre-DDL schema: {old.dtypes}")
 
-    # Twin created AT the final schema, fed the equivalent batches
-    # (b2 only ever touched the later-dropped column: net no-op).
-    docs_f = docs.withColumnRenamed("lang", "language").withColumn(
-        "n_chars", F.col("n_chars").cast("long")
-    )
-    twin = SnapshotTable.create(
-        f"{workdir}/twin",
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("language", T.StringType()),
-                T.StructField("n_chars", T.LongType()),
-            ]
-        ),
-        ["doc_id"],
-        n_buckets=8,
-    )
-    twin.overwrite(docs_f, batch_id="b0")
-    twin.merge(spark, upd(docs_f, "language", F.col("doc_id") % 7 == 1, "aa"), batch_id="b1")
-    twin.merge(
-        spark,
-        upd(twin.read(spark), "language", F.col("doc_id") % 7 == 3, "bb"),
-        batch_id="b3",
-    )
-    twin.merge(spark, big.drop("quality"), batch_id="b4")
-    cols = ["doc_id", "language", "n_chars"]
-    got = sorted(tuple(r) for r in final.select(*cols).collect())
-    want = sorted(tuple(r) for r in twin.read(spark).select(*cols).collect())
-    if got != want:
-        raise AssertionError("evolved table diverged from the final-schema twin")
-    return final.select(*cols).orderBy("doc_id")
+        # Twin created AT the final schema, fed the equivalent batches
+        # (b2 only ever touched the later-dropped column: net no-op).
+        docs_f = docs.withColumnRenamed("lang", "language").withColumn(
+            "n_chars", F.col("n_chars").cast("long")
+        )
+        twin = SnapshotTable.create(
+            f"{workdir}/twin",
+            T.StructType(
+                [
+                    T.StructField("doc_id", T.LongType()),
+                    T.StructField("language", T.StringType()),
+                    T.StructField("n_chars", T.LongType()),
+                ]
+            ),
+            ["doc_id"],
+            n_buckets=8,
+        )
+        twin.overwrite(docs_f, batch_id="b0")
+        twin.merge(spark, upd(docs_f, "language", F.col("doc_id") % 7 == 1, "aa"), batch_id="b1")
+        twin.merge(
+            spark,
+            upd(twin.read(spark), "language", F.col("doc_id") % 7 == 3, "bb"),
+            batch_id="b3",
+        )
+        twin.merge(spark, big.drop("quality"), batch_id="b4")
+        cols = ["doc_id", "language", "n_chars"]
+        got = sorted(tuple(r) for r in final.select(*cols).collect())
+        want = sorted(tuple(r) for r in twin.read(spark).select(*cols).collect())
+        if got != want:
+            raise AssertionError("evolved table diverged from the final-schema twin")
+        # rows, not a read of the working directory removed below
+        return spark.createDataFrame(got, final.select(*cols).schema).orderBy("doc_id")
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
 
 
 @_q("cdc_bloom_lookup")
@@ -2522,6 +2527,7 @@ def st_latest_per_key(spark, sf_dir):
     """Streaming stateful compaction over the events table: 8-file parquet
     stream, one file per trigger, per-user latest-wins with cross-trigger
     state (streaming/stateful.py); returns the final compacted image."""
+    import shutil
     import tempfile
     import uuid
 
@@ -2531,7 +2537,6 @@ def st_latest_per_key(spark, sf_dir):
 
     ev = t(spark, sf_dir, "events").select("user_id", "event_id", "event_type", "value")
     src = tempfile.mkdtemp(prefix="lmkc-stateful-src-")
-    ev.repartition(8, F.col("event_id")).write.mode("overwrite").parquet(src)
     # state-store instances = shuffle partitions at stream start; size them
     # to the 8-file fixture (each of the 8 triggers otherwise checkpoints
     # 32 state partitions — pure per-trigger overhead at this scale; a
@@ -2539,6 +2544,7 @@ def st_latest_per_key(spark, sf_dir):
     _prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
+        ev.repartition(8, F.col("event_id")).write.mode("overwrite").parquet(src)
         emissions = run_compaction_to_memory(
             spark,
             src,
@@ -2551,6 +2557,8 @@ def st_latest_per_key(spark, sf_dir):
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", _prev)
+        # the memory sink holds the emissions; the source files are spent
+        shutil.rmtree(src, ignore_errors=True)
     w = Window.partitionBy("user_id").orderBy(F.col("event_id").desc())
     return (
         emissions.withColumn("rn", F.row_number().over(w))
@@ -2589,6 +2597,7 @@ def st_exactly_once_dedup(spark, sf_dir):
     SELF-VERIFYING: asserts redelivery was actually present in the input
     and that the deduped stream carries no duplicate event_id — before
     the oracle-checked aggregate is returned."""
+    import shutil
     import tempfile
     import uuid
 
@@ -2604,19 +2613,18 @@ def st_exactly_once_dedup(spark, sf_dir):
     redelivered = ev.unionByName(ev.filter(F.col("event_id") % 3 == 0)).unionByName(
         ev.filter(F.col("event_id") % 7 == 0)
     )
-    src = tempfile.mkdtemp(prefix="lmkc-dedup-src-")
-    redelivered.repartition(8, F.col("event_id")).write.mode("overwrite").parquet(src)
-
     n_total, n_distinct = redelivered.count(), ev.count()
     if n_total <= n_distinct:
         raise AssertionError("fixture broken: no redelivered events in the input")
-    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    deduped = dedup_within_watermark(stream, ["event_id"], "ts", "365 days")
+    src = tempfile.mkdtemp(prefix="lmkc-dedup-src-")
     name = f"lmkc_dedup_{uuid.uuid4().hex[:8]}"
     # see st_latest_per_key: state partitions sized to the 8-file fixture
     _prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
+        redelivered.repartition(8, F.col("event_id")).write.mode("overwrite").parquet(src)
+        stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
+        deduped = dedup_within_watermark(stream, ["event_id"], "ts", "365 days")
         q = (
             deduped.writeStream.format("memory")
             .queryName(name)
@@ -2627,6 +2635,8 @@ def st_exactly_once_dedup(spark, sf_dir):
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", _prev)
+        # the memory sink holds the output; the source files are spent
+        shutil.rmtree(src, ignore_errors=True)
     out = spark.table(name)
     if out.count() != n_distinct or out.select("event_id").distinct().count() != n_distinct:
         raise AssertionError("deduped stream does not carry each event exactly once")

@@ -668,8 +668,30 @@ class CsfContiguityError(ValueError):
     """The fused reassembly's source contract was violated: chunks of a
     CSF group were not consecutive rows of one scan partition. The driver
     catches this (it surfaces as the Spark job failure wrapping the task's
-    Python exception) and re-runs the batch through the exchange-based
-    ``reassemble_csf`` path, which makes no contiguity assumption."""
+    Python exception, see ``is_csf_contiguity_failure``) and re-runs the
+    batch through the exchange-based ``reassemble_csf`` path, which makes
+    no contiguity assumption."""
+
+
+# The worker's traceback ends with the raised exception's qualified name at
+# the start of a line; the job failure that reaches the driver carries
+# that traceback in its message.
+_CSF_FAILURE_RE = re.compile(
+    rf"^{re.escape(CsfContiguityError.__module__)}\.CsfContiguityError: ", re.M
+)
+
+
+def is_csf_contiguity_failure(exc: BaseException) -> bool:
+    """True when ``exc`` is a Spark job failure whose Python worker raised
+    ``CsfContiguityError`` — and nothing else: a driver-side error, or a
+    job failure that merely mentions the name, is not a contract violation
+    and must not be retried through the exchange path."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    return isinstance(exc, (PySparkException, Py4JJavaError)) and bool(
+        _CSF_FAILURE_RE.search(str(exc))
+    )
 
 
 def make_fused_reassemble_parse_fn(
@@ -696,7 +718,8 @@ def make_fused_reassemble_parse_fn(
 
     Contract (checked row-for-row, vectorized): within a partition each
     CSF group appears as a consecutive run — ``seq`` = 0..k with ``csf``
-    true on all but the last chunk. Arrow batch boundaries inside a task
+    true on all but the last chunk, and ``(xid, scn, row_id)`` constant
+    along the run. Arrow batch boundaries inside a task
     are healed with a carry buffer; a violation raises
     ``CsfContiguityError`` and the caller falls back to the exchange path
     (same results by construction; the fused path never guesses).
@@ -749,6 +772,18 @@ def make_fused_reassemble_parse_fn(
                 f"csf flag does not match run structure at "
                 f"scn={int(pdf['scn'].iloc[bad])}"
             )
+        # a well-shaped run can still splice two statements (interleaved
+        # equal-length groups A0,B1,B0,A1): every chunk of a run must
+        # carry its head's statement identity
+        for c in ("xid", "scn", "row_id"):
+            v = pdf[c].to_numpy()
+            diff = v != np.repeat(v[starts], lens)
+            if diff.any():
+                bad = int(np.flatnonzero(diff)[0])
+                raise CsfContiguityError(
+                    f"CSF run mixes statements: {c}={v[bad]!r} continues a "
+                    f"run headed by {c}={v[bad - pos[bad]]!r}"
+                )
         sqls = pdf["sql_redo"].tolist()
         stmts = [
             sqls[s] if l == 1 else "".join(sqls[s : s + l])

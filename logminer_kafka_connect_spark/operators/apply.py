@@ -265,16 +265,18 @@ def build_merge_source_typed(
     return net.select(*out, op.alias(OP_COL), set_cols.alias(SET_COLS_COL))
 
 
-def partition_lineage(changes: DataFrame, batch_id: str) -> DataFrame:
-    """A7 — per-partition SCN range + row counts for the lineage table
+def partition_lineage(changes: DataFrame) -> list[dict]:
+    """A7 — per-partition SCN range + row counts for the lineage record
     (north_rule; reference analog: per-record offset maps,
-    ``ConnectSchemaFactory.kt:129-131``)."""
-    return (
-        changes.groupBy(F.spark_partition_id().alias("partition_id"))
+    ``ConnectSchemaFactory.kt:129-131``), collected to the driver: one
+    small row per non-empty partition."""
+    return [
+        r.asDict()
+        for r in changes.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(
             F.min("scn").alias("scn_min"),
             F.max("scn").alias("scn_max"),
             F.count(F.lit(1)).alias("n_rows"),
         )
-        .withColumn("batch_id", F.lit(batch_id))
-    )
+        .collect()
+    ]

@@ -349,6 +349,11 @@ class SnapshotTable:
         ceiling is <= this has been applied (ranges commit in SCN order)."""
         return self.metadata().get("applied_scn_hi")
 
+    def applied_ddl_scn(self) -> int | None:
+        """SCN of the latest redo-log DDL this table applied (see
+        ``streaming.ddl.apply_ddl``); None before any."""
+        return self.metadata().get("applied_ddl_scn")
+
     def is_applied(self, batch_id: str, scn_hi: int | None = None) -> bool:
         """Idempotence check for a batch. ``scn_hi`` is the batch's
         *exclusive* commit-SCN ceiling (bounded-replay ranges only; pass
@@ -1442,7 +1447,7 @@ class SnapshotTable:
             self._data_dir, f"commit-{version:06d}-{uuid.uuid4().hex[:8]}-delta"
         )
         (
-            out.repartition(min(n_buckets, 32), F.col(BUCKET_COL))
+            out.repartition(n_buckets, F.col(BUCKET_COL))
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
             .parquet(delta_dir)
@@ -1510,7 +1515,7 @@ class SnapshotTable:
         merged = self._read_buckets_of(spark, meta, touched).withColumn(
             BUCKET_COL, _bucket_expr(key_cols, n_buckets)
         )
-        merged = merged.repartition(min(n_buckets, 32), F.col(BUCKET_COL))
+        merged = merged.repartition(n_buckets, F.col(BUCKET_COL))
         new_map, new_stats = self._write_buckets(merged, version, pre_partitioned=True)
 
         buckets = dict(meta["buckets"])
@@ -1548,9 +1553,13 @@ class SnapshotTable:
         }
 
     # ------------------------------------------------------ schema evolution
-    def add_column(self, name: str, data_type: T.DataType, default: Any = None) -> int:
+    def add_column(
+        self, name: str, data_type: T.DataType, default: Any = None, ddl_scn: int | None = None
+    ) -> int:
         """Metadata-only ADD COLUMN (T9). Existing rows read back the
-        initial default (or null), matching ``ChangingTableTest.kt:42-93``."""
+        initial default (or null), matching ``ChangingTableTest.kt:42-93``.
+        ``ddl_scn`` — the redo-log SCN of the ALTER — is recorded as
+        ``applied_ddl_scn``."""
         meta = self.metadata()
         schema = T.StructType.fromJson(meta["schema"])
         if name in [f.name for f in schema.fields]:
@@ -1566,12 +1575,14 @@ class SnapshotTable:
             timestamp=time.time(),
             schema=schema.jsonValue(),
             column_defaults=defaults,
+            applied_ddl_scn=meta.get("applied_ddl_scn") if ddl_scn is None else ddl_scn,
         )
         self._commit(new_meta)
         return new_meta["version"]
 
-    def rename_column(self, old: str, new: str) -> int:
-        """Metadata-only RENAME COLUMN; old physical files reconcile at read."""
+    def rename_column(self, old: str, new: str, ddl_scn: int | None = None) -> int:
+        """Metadata-only RENAME COLUMN; old physical files reconcile at read.
+        ``ddl_scn`` as in ``add_column``."""
         meta = self.metadata()
         schema = T.StructType.fromJson(meta["schema"])
         names = [f.name for f in schema.fields]
@@ -1603,6 +1614,7 @@ class SnapshotTable:
             schema=T.StructType(fields).jsonValue(),
             renames=meta.get("renames", []) + [[old, new]],
             column_defaults=defaults,
+            applied_ddl_scn=meta.get("applied_ddl_scn") if ddl_scn is None else ddl_scn,
         )
         self._commit(new_meta)
         return new_meta["version"]

@@ -3,23 +3,26 @@
 The reference resumes from a Kafka Connect offset map
 (``Offset.kt:19-38``: ``scn, commitScn, isTransactionComplete``). Our analog
 is an append-only file-per-batch log with one *batch record* per applied
-microbatch plus its per-partition lineage rows:
+microbatch, which carries its per-partition lineage rows:
 
 - batch record: ``batch_id, scn_lo, scn_hi, commit_watermark (A1: min SCN of
   still-open transactions — the safe resume point, TransactionConsolidator.
-  kt:57-62,113-115), n_events, n_applied, table_version, wall_s``
-- partition rows: ``batch_id, partition_id, scn_min, scn_max, n_rows``
-  (north_rule per-partition lineage; the reference's analog is the offset
-  map attached to every SourceRecord, ConnectSchemaFactory.kt:129-131).
+  kt:57-62,113-115), n_events, n_applied, table_version, wall_s, partitions``
+- ``partitions``: ``[{partition_id, scn_min, scn_max, n_rows}]`` (plus
+  ``table`` from the multi-table driver) — north_rule per-partition
+  lineage; the reference's analog is the offset map attached to every
+  SourceRecord, ConnectSchemaFactory.kt:129-131. The rows are gathered on
+  the driver during the merge job, so recording them costs no Spark job;
+  ``partition_lineage`` serves them as a DataFrame.
 
 Append cost is O(1) per batch: each record is its own
-``batches/<seq>-<batch_id>.json`` file (the same layout as ``partitions/``),
-so a 10^6-microbatch replay never rewrites history — the reference's Kafka
-Connect offsets are likewise O(1) per poll (``Offset.kt:19-38``). Round 2
-kept one growing ``batches.jsonl`` and rewrote it per append (O(B^2) driver
-IO over B batches, and on HadoopFS the delete+rename overwrite window could
-drop the whole history on a crash); that file is still *read* for backward
-compatibility but never written.
+``batches/<seq>-<batch_id>.json`` file, so a 10^6-microbatch replay never
+rewrites history — the reference's Kafka Connect offsets are likewise O(1)
+per poll (``Offset.kt:19-38``). Round 2 kept one growing ``batches.jsonl``
+and rewrote it per append (O(B^2) driver IO over B batches, and on HadoopFS
+the delete+rename overwrite window could drop the whole history on a
+crash); that file is still *read* for backward compatibility but never
+written.
 
 Within one driver process the log is additionally cached in memory
 (single-writer contract), so per-batch resume checks cost no file IO at
@@ -48,8 +51,6 @@ class LineageLog:
         self.fs = fs or LocalFS()
         self._legacy = os.path.join(path, "batches.jsonl")
         self._batches_dir = os.path.join(path, "batches")
-        self._parts_dir = os.path.join(path, "partitions")
-        self.fs.makedirs(self._parts_dir)
         self.fs.makedirs(self._batches_dir)
         # in-memory cache (single-writer): loaded lazily once, then appended
         self._cache: list[dict[str, Any]] | None = None
@@ -73,10 +74,7 @@ class LineageLog:
         return out
 
     # -------------------------------------------------------------- recording
-    def record_batch(self, record: dict[str, Any], partition_df: DataFrame | None = None) -> None:
-        if partition_df is not None:
-            out = os.path.join(self._parts_dir, f"batch-{record['batch_id']}")
-            partition_df.write.mode("overwrite").parquet(out)
+    def record_batch(self, record: dict[str, Any]) -> None:
         batches = self._load()
         seq = len(batches)
         # seq prefix keeps directory listing order == append order; the
@@ -110,6 +108,19 @@ class LineageLog:
         return set(self._ids or set())
 
     def partition_lineage(self, spark: SparkSession) -> DataFrame | None:
-        if not self.fs.listdir(self._parts_dir):
+        """Every recorded batch's partition rows, tagged with ``batch_id``
+        (and ``table`` when the multi-table driver recorded them); None
+        before any batch recorded rows."""
+        rows = [
+            dict(p, batch_id=b["batch_id"])
+            for b in self._load()
+            for p in b.get("partitions") or []
+        ]
+        if not rows:
             return None
-        return spark.read.parquet(os.path.join(self._parts_dir, "batch-*"))
+        names = ["partition_id", "scn_min", "scn_max", "n_rows", "batch_id"]
+        schema = "partition_id int, scn_min bigint, scn_max bigint, n_rows bigint, batch_id string"
+        if any("table" in r for r in rows):
+            names.append("table")
+            schema += ", table string"
+        return spark.createDataFrame([tuple(r.get(n) for n in names) for r in rows], schema)

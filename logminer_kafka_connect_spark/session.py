@@ -17,8 +17,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def get_spark(
     app_name: str = "logminer-kafka-connect-spark",
@@ -32,17 +30,16 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (driver contract) or
     ``local[*]``. In local mode the driver JVM is the whole cluster, so
     ``spark.driver.memory`` is the only memory knob that matters.
+    ``shuffle_partitions`` defaults to the context's ``defaultParallelism``
+    (one shuffle partition per core).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -85,5 +82,9 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(shuffle_partitions or spark.sparkContext.defaultParallelism),
+    )
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -65,18 +65,32 @@ def parse_ddl(scn: int, sql: str, owner: str | None = None, table: str | None = 
 
 
 def apply_ddl(table: SnapshotTable, ddl: DdlEvent) -> int:
-    """ALTER the snapshot table (idempotent — safe under crash-replay).
+    """ALTER the snapshot table (idempotent — safe under crash-replay and
+    re-replay).
+
+    Idempotence is by SCN: the table records the SCN of the last DDL it
+    applied, and a DDL at or below it is a no-op. Column names alone cannot
+    tell: after ADD ``a`` then RENAME ``a`` TO ``b``, a re-applied ADD
+    finds no ``a`` and would add it again, and the RENAME would then put a
+    second ``b`` in the schema.
 
     Column default literals go through the reference's cleanup rules
     (trim/strip quotes, ``SYSDATE``-family unresolvable -> null, C5,
     ``ColumnSchemaBuilder.kt:23-29, 98-107``).
     """
+    applied = table.applied_ddl_scn()
+    if applied is not None and ddl.scn <= applied:
+        return table.current_version()
     if ddl.kind == "add":
         spark_type = oracle_to_spark_type(ddl.oracle_type)
         default = _clean_default(ddl.default, spark_type) if ddl.default else None
-        return table.add_column(ddl.column.lower(), spark_type, default=default)
+        return table.add_column(
+            ddl.column.lower(), spark_type, default=default, ddl_scn=ddl.scn
+        )
     if ddl.kind == "rename":
-        return table.rename_column(ddl.column.lower(), ddl.new_name.lower())
+        return table.rename_column(
+            ddl.column.lower(), ddl.new_name.lower(), ddl_scn=ddl.scn
+        )
     raise ValueError(f"unknown DDL kind: {ddl.kind}")
 
 

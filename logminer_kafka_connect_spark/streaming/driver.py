@@ -35,12 +35,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logminer_kafka_connect_spark.functions.redo_parse import is_csf_contiguity_failure
 from logminer_kafka_connect_spark.operators.apply import (
     build_merge_source_typed,
     parse_committed_typed,
     partition_lineage,
 )
 from logminer_kafka_connect_spark.operators.consolidate import (
+    BROADCAST_MARKER_LIMIT,
     consolidate,
     consolidate_with_markers,
     open_txn_watermark,
@@ -130,14 +132,14 @@ class ReplayDriver:
         # touched the main table; nothing to roll back). See
         # ``_apply_to_table``.
         self.audit_hook = None
-        # Fused CSF reassembly (round 6, guide §8/§4): bulk-replay batches
-        # reassemble chunked statements inside the parse's own mapInPandas
-        # pass instead of through a full-text Exchange (644 MB/batch at
-        # bench scale). Relies on the redo-log source contract that a CSF
-        # group's chunks are consecutive rows (LogminerFetcher.kt:144-153);
-        # violated -> CsfContiguityError -> process_range retries the
-        # batch through the exchange path automatically. LMKC_FUSED=0
-        # disables (A/B knob).
+        # Fused CSF reassembly (round 6, guide §8/§4): replay ranges and
+        # streaming triggers reassemble chunked statements inside the
+        # parse's own mapInPandas pass instead of through a full-text
+        # Exchange (644 MB/batch at bench scale). Relies on the redo-log
+        # source contract that a CSF group's chunks are consecutive rows
+        # (LogminerFetcher.kt:144-153); violated -> CsfContiguityError ->
+        # _apply_consolidated retries the batch through the exchange path
+        # automatically. LMKC_FUSED=0 disables (A/B knob).
         self.fused_parse = os.environ.get("LMKC_FUSED", "1") != "0"
 
     # ------------------------------------------------------ auto salting
@@ -311,7 +313,7 @@ class ReplayDriver:
         quarantine_key: str | None = None,
         salt_chunks: int | tuple | None = None,
         raw_chunks: bool = False,
-    ) -> tuple[int, int, int, DataFrame | None]:
+    ) -> tuple[int, int, int, list[dict] | None]:
         """Parse -> (error routing) -> net-effect fold -> MERGE for one
         target table over its committed changes — wrapped, when
         ``audit_hook`` is set, in a write-audit-publish cycle: the batch
@@ -321,7 +323,7 @@ class ReplayDriver:
         advanced; rerunning after a fix retries the same batch id). The
         branch's ledger extends main's at fork, so idempotence and the
         SCN watermark cross the publish unchanged. Returns
-        ``(n_net_rows, n_parse_errors, n_quarantined, partition_lineage_df)``.
+        ``(n_net_rows, n_parse_errors, n_quarantined, partition_rows)``.
         Shared by the single-table and multi-table drivers."""
         scn_hi = scn_bounds[1] if scn_bounds is not None else None
         if self.audit_hook is not None:
@@ -381,13 +383,13 @@ class ReplayDriver:
         quarantine_key: str | None = None,
         salt_chunks: int | tuple | None = None,
         raw_chunks: bool = False,
-    ) -> tuple[int, int, int, DataFrame | None]:
+    ) -> tuple[int, int, int, list[dict] | None]:
         scn_hi = scn_bounds[1] if scn_bounds is not None else None
         if table.is_applied(batch_id, scn_hi=scn_hi):
             return 0, 0, 0, None
         n_parse_errors = 0
         n_quarantined = 0
-        part_df = None
+        part_rows = None
         schema = table.schema()
         # keep_sql whenever the tracked abort path could quarantine from
         # this plan (lazy — only ever evaluated on that rare path); the
@@ -445,14 +447,11 @@ class ReplayDriver:
             )
             if stats.applied:
                 if lineage_acc is not None:
-                    part_df = self.spark.createDataFrame(
-                        [
-                            (pid, mn, mx, n, batch_id)
-                            for pid, mn, mx, n in lineage_rows_from_acc(lineage_acc.value)
-                        ],
-                        "partition_id int, scn_min bigint, scn_max bigint, n_rows bigint, batch_id string",
-                    )
-                return stats.source_rows, 0, 0, part_df
+                    part_rows = [
+                        {"partition_id": pid, "scn_min": mn, "scn_max": mx, "n_rows": n}
+                        for pid, mn, mx, n in lineage_rows_from_acc(lineage_acc.value)
+                    ]
+                return stats.source_rows, 0, 0, part_rows
             # aborted: parse errors present -> the full r2 slow path. The
             # error count and the dead-letter write run regardless of which
             # tracking flag got us here — with lineage on but error stats
@@ -481,7 +480,7 @@ class ReplayDriver:
                 )
             good = parsed.filter(F.col("parse_error").isNull())
             if self.track_partition_lineage:
-                part_df = partition_lineage(good, batch_id)
+                part_rows = partition_lineage(good)
             err_obs = None
         else:
             # Stats tracking is off, but the 'never silently dropped'
@@ -525,7 +524,30 @@ class ReplayDriver:
                 raw_chunks=raw_chunks,
             ).filter(F.col("parse_error").isNotNull())
             n_quarantined = self._quarantine(failing, quarantine_key or batch_id)
-        return stats.source_rows, n_parse_errors, n_quarantined, part_df
+        return stats.source_rows, n_parse_errors, n_quarantined, part_rows
+
+    def _apply_consolidated(
+        self, consolidate_fn, batch_id: str, fused: bool, **kw
+    ) -> tuple[int, int, int, list[dict] | None]:
+        """Apply one batch to ``self.table``. ``consolidate_fn(reassemble)``
+        builds the batch's committed changes; ``fused`` takes the fused
+        reassembly+parse, which falls back to the exchange-based
+        ``reassemble_csf`` when the source breaks its contiguity contract.
+        Nothing was committed by the failed attempt (the MERGE manifest
+        swap is atomic and the parse failed before it), so the retry
+        recomputes from scratch under the same batch id."""
+        if fused:
+            try:
+                return self._apply_to_table(
+                    consolidate_fn(False), batch_id, self.table, self.key_col,
+                    raw_chunks=True, **kw,
+                )
+            except Exception as e:
+                if not is_csf_contiguity_failure(e):
+                    raise
+        return self._apply_to_table(
+            consolidate_fn(True), batch_id, self.table, self.key_col, **kw
+        )
 
     def process_range(
         self,
@@ -541,11 +563,6 @@ class ReplayDriver:
             return {"batch_id": batch_id, "skipped": True}
         t0 = time.time()
 
-        committed = consolidate(
-            events, self.selectors, lo, hi, change_lo=change_lo,
-            marker_count_hint=marker_count_hint,
-            reassemble=not self.fused_parse,
-        )
         salt = (
             self._resolve_salt_chunks(events, hi, change_lo, self.key_col)
             if salt_override == "unset"
@@ -567,27 +584,18 @@ class ReplayDriver:
                 open_txn_watermark, events, self.selectors, hi, change_lo=change_lo
             )
             _pool.shutdown(wait=False)
-        try:
-            n_changes, n_parse_errors, n_quarantined, part_df = self._apply_to_table(
-                committed, batch_id, self.table, self.key_col, scn_bounds=(lo, hi),
-                salt_chunks=salt, raw_chunks=self.fused_parse,
-            )
-        except Exception as e:
-            # Fused-reassembly contract violation (chunks not partition-
-            # contiguous in this source): fall back to the exchange-based
-            # reassembly for this batch. Nothing was committed (the MERGE
-            # manifest swap is atomic and the parse failed before it), so
-            # the retry recomputes from scratch under the same batch id.
-            if not (self.fused_parse and "CsfContiguityError" in str(e)):
-                raise
-            committed = consolidate(
+        # a shuffled commit join (at or above the broadcast limit) loses
+        # the partition-local row order the fused pass relies on
+        fused = self.fused_parse and (
+            marker_count_hint is None or marker_count_hint < BROADCAST_MARKER_LIMIT
+        )
+        n_changes, n_parse_errors, n_quarantined, part_rows = self._apply_consolidated(
+            lambda reassemble: consolidate(
                 events, self.selectors, lo, hi, change_lo=change_lo,
-                marker_count_hint=marker_count_hint, reassemble=True,
-            )
-            n_changes, n_parse_errors, n_quarantined, part_df = self._apply_to_table(
-                committed, batch_id, self.table, self.key_col, scn_bounds=(lo, hi),
-                salt_chunks=salt, raw_chunks=False,
-            )
+                marker_count_hint=marker_count_hint, reassemble=reassemble,
+            ),
+            batch_id, fused, scn_bounds=(lo, hi), salt_chunks=salt,
+        )
 
         if wm_fut is not None:
             watermark, n_open = wm_fut.result()
@@ -607,8 +615,9 @@ class ReplayDriver:
             "n_quarantined": n_quarantined,
             "table_version": self.table.current_version(),
             "wall_s": round(time.time() - t0, 3),
+            "partitions": part_rows,
         }
-        self.lineage.record_batch(record, partition_df=part_df)
+        self.lineage.record_batch(record)
         return record
 
     # ------------------------------------------------------- bounded replay
@@ -762,37 +771,118 @@ class ReplayDriver:
             self.table.compact(self.spark)
 
     # ---------------------------------------------------------- streaming
+    def _apply_trigger(
+        self,
+        batch_df: DataFrame,
+        epoch_id: int,
+        log_df: DataFrame,
+        start_scn: int | None = None,
+    ) -> None:
+        """One streaming trigger: the markers ``batch_df`` delivered, split
+        into sub-batches at its DDL positions — markers below a DDL commit
+        first, then the ALTER, then the rest (T9 ordering). Besides the DDL
+        collect, one grouped aggregate gives every segment's SCN span: the
+        order check, the skip of empty segments and each batch record's
+        ``scn_lo``/``scn_hi`` all read from it."""
+        markers_all = filter_markers(batch_df)
+        if start_scn is not None:
+            markers_all = markers_all.filter(F.col("scn") > start_scn)
+        markers_all = markers_all.persist()
+        try:
+            ddl_rows = (
+                filter_ddl(batch_df, self.selectors)
+                .select("scn", "sql_redo", "seg_owner", "table_name")
+                .collect()
+            )
+            ddls = sorted(
+                (
+                    e
+                    for e in (
+                        parse_ddl(r["scn"], r["sql_redo"], r["seg_owner"], r["table_name"])
+                        for r in ddl_rows
+                    )
+                    if e
+                ),
+                key=lambda e: e.scn,
+            )
+            bounds = [e.scn for e in ddls]
+            # segment k holds the markers in [bounds[k-1], bounds[k])
+            seg = F.lit(0)
+            for b in bounds:
+                seg = seg + (F.col("scn") >= b).cast("int")
+            spans = {
+                r["seg"]: (r["lo"], r["hi"])
+                for r in markers_all.groupBy(seg.alias("seg"))
+                .agg(F.min("scn").alias("lo"), F.max("scn").alias("hi"))
+                .collect()
+            }
+            # In-order contract: last-write-wins across triggers requires
+            # commit markers to arrive in (roughly) SCN order — true for a
+            # CDC tail appended in SCN order. Detect violations loudly
+            # instead of silently applying stale images.
+            prev = self.lineage.last_batch()
+            if spans and prev and prev.get("scn_lo") is not None:
+                trigger_lo = min(lo for lo, _ in spans.values())
+                if trigger_lo < prev["scn_lo"]:
+                    raise RuntimeError(
+                        f"out-of-order commit markers: trigger min scn "
+                        f"{trigger_lo} < previously applied batch lo "
+                        f"{prev['scn_lo']}; the event log must be "
+                        f"appended in SCN order"
+                    )
+            lo = None
+            for k, b in enumerate(bounds + [None]):
+                if k in spans:
+                    m = markers_all
+                    if lo is not None:
+                        m = m.filter(F.col("scn") >= lo)
+                    if b is not None:
+                        m = m.filter(F.col("scn") < b)
+                    self.process_markers(
+                        log_df, m, f"stream-{epoch_id}-{k}", spans[k], commit_hi=b
+                    )
+                if b is not None:
+                    apply_ddl(self._ddl_target(ddls[k]), ddls[k])
+                lo = b
+        finally:
+            markers_all.unpersist()
+
     def process_markers(
         self,
         full_log: DataFrame,
         markers: DataFrame,
         batch_id: str,
+        scn_span: tuple[int, int],
         commit_hi: int | None = None,
     ) -> dict:
         """Apply exactly the transactions whose COMMIT/ROLLBACK marker is in
         ``markers`` (streaming path — exactly-once per marker, since the
-        file source delivers each event file exactly once per checkpoint)."""
+        file source delivers each event file exactly once per checkpoint).
+        ``scn_span`` is the markers' ``(min, max)`` SCN, which the trigger
+        already aggregated."""
         if batch_id in self.lineage.applied_batch_ids():
             return {"batch_id": batch_id, "skipped": True}
         t0 = time.time()
-        committed = consolidate_with_markers(full_log, self.selectors, markers, commit_hi)
-        n_changes, n_parse_errors, n_quarantined, part_df = self._apply_to_table(
-            committed, batch_id, self.table, self.key_col
+        n_changes, n_parse_errors, n_quarantined, part_rows = self._apply_consolidated(
+            lambda reassemble: consolidate_with_markers(
+                full_log, self.selectors, markers, commit_hi, reassemble=reassemble
+            ),
+            batch_id, self.fused_parse,
         )
         self._maybe_compact()
-        span = markers.agg(F.min("scn").alias("lo"), F.max("scn").alias("hi")).collect()[0]
         record = {
             "batch_id": batch_id,
-            "scn_lo": span["lo"],
-            "scn_hi": span["hi"],
+            "scn_lo": scn_span[0],
+            "scn_hi": scn_span[1],
             "commit_watermark": None,
             "n_net_rows": n_changes,
             "n_parse_errors": n_parse_errors,
             "n_quarantined": n_quarantined,
             "table_version": self.table.current_version(),
             "wall_s": round(time.time() - t0, 3),
+            "partitions": part_rows,
         }
-        self.lineage.record_batch(record, partition_df=part_df)
+        self.lineage.record_batch(record)
         return record
 
     def run_streaming(
@@ -837,60 +927,7 @@ class ReplayDriver:
                 if full_log is not None
                 else spark.read.schema(EVENT_SCHEMA).parquet(events_path)
             )
-            markers_all = filter_markers(batch_df)
-            if start_scn is not None:
-                markers_all = markers_all.filter(F.col("scn") > start_scn)
-            markers_all = markers_all.persist()
-            try:
-                # In-order contract: last-write-wins across triggers requires
-                # commit markers to arrive in (roughly) SCN order — true for
-                # a CDC tail appended in SCN order. Detect violations loudly
-                # instead of silently applying stale images.
-                prev = self.lineage.last_batch()
-                if prev and prev.get("scn_lo") is not None:
-                    lo_row = markers_all.agg(F.min("scn").alias("lo")).collect()[0]
-                    if lo_row["lo"] is not None and lo_row["lo"] < prev["scn_lo"]:
-                        raise RuntimeError(
-                            f"out-of-order commit markers: trigger min scn "
-                            f"{lo_row['lo']} < previously applied batch lo "
-                            f"{prev['scn_lo']}; the event log must be "
-                            f"appended in SCN order"
-                        )
-                ddl_rows = (
-                    filter_ddl(batch_df, self.selectors)
-                    .select("scn", "sql_redo", "seg_owner", "table_name")
-                    .collect()
-                )
-                ddls = sorted(
-                    (
-                        e
-                        for e in (
-                            parse_ddl(r["scn"], r["sql_redo"], r["seg_owner"], r["table_name"])
-                            for r in ddl_rows
-                        )
-                        if e
-                    ),
-                    key=lambda e: e.scn,
-                )
-                # sub-batches split at DDL positions: markers below the DDL
-                # commit first, then the ALTER, then the rest (T9 ordering)
-                bounds = [e.scn for e in ddls]
-                lo = None
-                for k, b in enumerate(bounds + [None]):
-                    m = markers_all
-                    if lo is not None:
-                        m = m.filter(F.col("scn") >= lo)
-                    if b is not None:
-                        m = m.filter(F.col("scn") < b)
-                    if m.limit(1).count() > 0:
-                        self.process_markers(
-                            log_df, m, f"stream-{epoch_id}-{k}", commit_hi=b
-                        )
-                    if b is not None:
-                        apply_ddl(self._ddl_target(ddls[k]), ddls[k])
-                    lo = b
-            finally:
-                markers_all.unpersist()
+            self._apply_trigger(batch_df, epoch_id, log_df, start_scn)
 
         stream = (
             spark.readStream.schema(EVENT_SCHEMA)
@@ -962,7 +999,7 @@ class MultiTableReplayDriver(ReplayDriver):
     def _apply_tables(
         self, committed: DataFrame, batch_id: str, lo_hi, events: DataFrame | None,
         change_lo: int | None = None,
-    ) -> tuple[dict[str, dict], int, int, int, DataFrame | None]:
+    ) -> tuple[dict[str, dict], int, int, int, list[dict] | None]:
         """Run every binding's parse->fold->MERGE over its slice of the
         consolidated batch — concurrently when enabled. Results keyed and
         aggregated in binding order (deterministic regardless of completion
@@ -1005,7 +1042,7 @@ class MultiTableReplayDriver(ReplayDriver):
 
         per_table: dict[str, dict] = {}
         n_changes = n_parse_errors = n_quarantined = 0
-        part_dfs = []
+        part_rows = None
         for b, (n_c, n_e, n_q, part) in zip(self.bindings, results):
             per_table[b.name] = {
                 "n_net_rows": n_c,
@@ -1017,13 +1054,8 @@ class MultiTableReplayDriver(ReplayDriver):
             n_parse_errors += n_e
             n_quarantined += n_q
             if part is not None:
-                part_dfs.append(part.withColumn("table", F.lit(b.name)))
-        part_df = None
-        if part_dfs:
-            part_df = part_dfs[0]
-            for p in part_dfs[1:]:
-                part_df = part_df.unionByName(p)
-        return per_table, n_changes, n_parse_errors, n_quarantined, part_df
+                part_rows = (part_rows or []) + [dict(r, table=b.name) for r in part]
+        return per_table, n_changes, n_parse_errors, n_quarantined, part_rows
 
     def _ddl_target(self, ddl: DdlEvent) -> SnapshotTable:
         for b in self.bindings:
@@ -1055,7 +1087,7 @@ class MultiTableReplayDriver(ReplayDriver):
             marker_count_hint=marker_count_hint,
         ).persist()
         try:
-            per_table, n_changes, n_parse_errors, n_quarantined, part_df = (
+            per_table, n_changes, n_parse_errors, n_quarantined, part_rows = (
                 self._apply_tables(committed, batch_id, (lo, hi), events, change_lo)
             )
         finally:
@@ -1081,8 +1113,9 @@ class MultiTableReplayDriver(ReplayDriver):
             "tables": per_table,
             "table_version": self.table.current_version(),
             "wall_s": round(time.time() - t0, 3),
+            "partitions": part_rows,
         }
-        self.lineage.record_batch(record, partition_df=part_df)
+        self.lineage.record_batch(record)
         return record
 
     def process_markers(
@@ -1090,6 +1123,7 @@ class MultiTableReplayDriver(ReplayDriver):
         full_log: DataFrame,
         markers: DataFrame,
         batch_id: str,
+        scn_span: tuple[int, int],
         commit_hi: int | None = None,
     ) -> dict:
         """Streaming trigger for N tables: consolidate the trigger's
@@ -1102,16 +1136,15 @@ class MultiTableReplayDriver(ReplayDriver):
             full_log, self.selectors, markers, commit_hi
         ).persist()
         try:
-            per_table, n_changes, n_parse_errors, n_quarantined, part_df = (
+            per_table, n_changes, n_parse_errors, n_quarantined, part_rows = (
                 self._apply_tables(committed, batch_id, None, None)
             )
         finally:
             committed.unpersist()
-        span = markers.agg(F.min("scn").alias("lo"), F.max("scn").alias("hi")).collect()[0]
         record = {
             "batch_id": batch_id,
-            "scn_lo": span["lo"],
-            "scn_hi": span["hi"],
+            "scn_lo": scn_span[0],
+            "scn_hi": scn_span[1],
             "commit_watermark": None,
             "n_net_rows": n_changes,
             "n_parse_errors": n_parse_errors,
@@ -1119,8 +1152,9 @@ class MultiTableReplayDriver(ReplayDriver):
             "tables": per_table,
             "table_version": self.table.current_version(),
             "wall_s": round(time.time() - t0, 3),
+            "partitions": part_rows,
         }
-        self.lineage.record_batch(record, partition_df=part_df)
+        self.lineage.record_batch(record)
         return record
 
 

@@ -9,9 +9,11 @@ Pins three things about ``parse_committed_typed(raw_chunks=True)``:
    before the net-effect fold (the classic path pays a full-text
    reassembly Exchange).
 3. **Fallback** — a log whose chunks are NOT partition-contiguous raises
-   ``CsfContiguityError`` inside the fused pass, and the driver-level
-   retry (``process_range``) lands the batch through the exchange path
-   with the identical final table state.
+   ``CsfContiguityError`` inside the fused pass (also when the runs are
+   well-shaped but splice two statements), and the driver-level retry
+   (``process_range``) lands the batch through the exchange path with the
+   identical final table state; only that error triggers the retry, and
+   a shuffled commit join never takes the fused pass.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logminer_kafka_connect_spark.engine import DEFAULT_SELECTORS, PAGES_SCHEMA
+from logminer_kafka_connect_spark.functions.redo_parse import is_csf_contiguity_failure
 from logminer_kafka_connect_spark.operators.apply import parse_committed_typed
 from logminer_kafka_connect_spark.operators.consolidate import consolidate
 from logminer_kafka_connect_spark.sources.generator import (
@@ -125,14 +128,91 @@ def test_contiguity_violation_raises(spark, tmpdir_path):
     with pytest.raises(Exception) as ei:
         fused.count()
     assert "CsfContiguityError" in str(ei.value)
+    assert is_csf_contiguity_failure(ei.value)
+
+
+def test_contiguity_failure_check_is_precise(spark):
+    """Only a worker-raised CsfContiguityError sends a batch down the
+    exchange path: a driver-side error or a job failure that merely
+    names it is not retried."""
+    from pyspark.sql.functions import udf
+
+    @udf("string")
+    def boom(x):
+        raise ValueError("not a CsfContiguityError")
+
+    with pytest.raises(Exception) as ei:
+        spark.range(1).select(boom("id")).collect()
+    assert "CsfContiguityError" in str(ei.value)
+    assert not is_csf_contiguity_failure(ei.value)
+    assert not is_csf_contiguity_failure(RuntimeError("CsfContiguityError: x"))
+
+
+def test_interleaved_equal_length_groups_raise():
+    """Two statements' chunks interleaved as A0,B1,B0,A1 have the right
+    run shape (seq 0,1,0,1; csf T,F,T,F); the fused pass must still
+    refuse, not splice A0+B1 and B0+A1."""
+    import pandas as pd
+
+    from logminer_kafka_connect_spark.functions.redo_parse import (
+        CsfContiguityError,
+        make_fused_reassemble_parse_fn,
+    )
+
+    fn, _ = make_fused_reassemble_parse_fn(PAGES_SCHEMA.fields)
+    a = "insert into \"CRAWL\".\"PAGES\"(\"URL\") values ('a');"
+    b = "insert into \"CRAWL\".\"PAGES\"(\"URL\") values ('b');"
+    pdf = pd.DataFrame(
+        {
+            "xid": ["x1", "x1", "x1", "x1"],
+            "scn": [10, 11, 11, 10],
+            "row_id": ["r1", "r2", "r2", "r1"],
+            "commit_scn": [20, 20, 20, 20],
+            "op_code": [1, 1, 1, 1],
+            "seq": [0, 1, 0, 1],
+            "csf": [True, False, True, False],
+            "sql_redo": [a[:20], b[20:], b[:20], a[20:]],
+        }
+    )
+    with pytest.raises(CsfContiguityError, match="mixes statements"):
+        list(fn(iter([pdf])))
+    # the same chunks in source order assemble both statements
+    ok = pdf.iloc[[0, 3, 2, 1]].reset_index(drop=True)
+    out = pd.concat(list(fn(iter([ok]))))
+    assert sorted(out["key"]) == ["a", "b"]
+    assert out["parse_error"].isna().all()
+
+
+def test_process_range_skips_fused_at_broadcast_limit(spark, tmpdir_path, monkeypatch):
+    """At or above BROADCAST_MARKER_LIMIT the commit join shuffles, which
+    loses the row order the fused pass relies on: process_range must
+    take the exchange-based reassembly from the start."""
+    from logminer_kafka_connect_spark.engine import CdcEngine
+    from logminer_kafka_connect_spark.operators.consolidate import BROADCAST_MARKER_LIMIT
+    from logminer_kafka_connect_spark.streaming import driver as driver_mod
+
+    engine = CdcEngine(spark, tmpdir_path, n_buckets=2)
+    engine.driver.track_watermark = False
+    seen = []
+    monkeypatch.setattr(
+        driver_mod, "consolidate",
+        lambda *a, reassemble=True, **kw: seen.append(reassemble) or "committed",
+    )
+    monkeypatch.setattr(
+        engine.driver, "_apply_to_table",
+        lambda committed, *a, raw_chunks=False, **kw: seen.append(raw_chunks) or (0, 0, 0, None),
+    )
+    events = spark.range(0)
+    engine.driver.process_range(events, 1, 2, None, BROADCAST_MARKER_LIMIT - 1, salt_override=None)
+    engine.driver.process_range(events, 2, 3, None, BROADCAST_MARKER_LIMIT, salt_override=None)
+    # (reassemble, raw_chunks) per batch: fused below the limit, classic at it
+    assert seen == [False, True, True, False]
 
 
 def test_driver_falls_back_on_scattered_log(spark, tmpdir_path):
     """End-to-end: replay over a scattered log (fused contract violated)
     must land the same final state as the classic engine — the
     process_range retry path."""
-    import tempfile
-
     from logminer_kafka_connect_spark.engine import CdcEngine
 
     gen = CdcGenerator(GeneratorConfig(seed=7, n_txns=150, n_urls=200, n_snapshot=60))
@@ -142,8 +222,7 @@ def test_driver_falls_back_on_scattered_log(spark, tmpdir_path):
 
     states = []
     for fused_flag, events in ((True, scattered), (False, scattered)):
-        workdir = tempfile.mkdtemp(prefix="lmkc-fb-")
-        engine = CdcEngine(spark, workdir, n_buckets=4)
+        engine = CdcEngine(spark, f"{tmpdir_path}/wd-{fused_flag}", n_buckets=4)
         engine.driver.fused_parse = fused_flag
         engine.load_snapshot(gen.snapshot_df(spark), snapshot_scn=SCN0 - 1)
         engine.replay(events, n_batches=2)

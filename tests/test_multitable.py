@@ -69,6 +69,12 @@ def test_two_table_interleaved_replay(spark, tmpdir_path):
     )
     _assert_equal(engine.state("LINKS").toPandas(), gen.expected_links_state(), "link_id")
 
+    # per-table partition lineage rides in the batch records
+    part = engine.lineage.partition_lineage(spark).toPandas()
+    assert set(part["table"]) == {"CRAWL.PAGES", "CRAWL.LINKS"}
+    assert set(part["batch_id"]) == {b["batch_id"] for b in engine.lineage.batches()}
+    assert (part["n_rows"] > 0).all()
+
 
 def test_two_table_crash_resume(spark, tmpdir_path):
     """Rerunning the multi-table replay is a per-table no-op (batch-id

@@ -126,11 +126,20 @@ def test_crash_resume_no_duplicates(spark, tmpdir_path):
 
 def test_ddl_mid_stream(spark, tmpdir_path):
     """ChangingTableTest.kt:42-93: ADD COLUMN with default + RENAME, applied
-    before the affected microbatch; old rows read the default."""
+    before the affected microbatch; old rows read the default. A second
+    replay of the log is a no-op (DDL idempotence by SCN)."""
     cfg = GeneratorConfig(seed=23, n_txns=120, n_urls=200, n_snapshot=60, include_ddl=True)
     engine, gen, _ = _run(spark, tmpdir_path, cfg, n_batches=5)
     cols = engine.state().columns
     assert "http_status" in cols and "fetch_status" not in cols
+
+    # replaying the same log again over the same working directory (its
+    # ADD and RENAME already applied) commits nothing and keeps the state
+    version, state = engine.table.current_version(), engine.state().toPandas()
+    again = CdcEngine(spark, tmpdir_path, n_buckets=8)
+    again.replay(gen.events_df(spark), n_batches=5)
+    assert again.table.current_version() == version
+    _assert_state_equal(again.state().toPandas(), state)
 
 
 def test_csf_reassembly_volume(spark, tmpdir_path):

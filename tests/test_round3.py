@@ -102,7 +102,7 @@ def test_salt_chunks_explicit_override(spark, tmpdir_path):
 
     engine = CdcEngine(spark, tmpdir_path, n_buckets=8, salt_chunks=7)
     assert engine.driver._resolve_salt_chunks(None, None, None, "url") == 7
-    engine2 = CdcEngine(spark, tmpdir_path + "-2", n_buckets=8, salt_chunks=None)
+    engine2 = CdcEngine(spark, f"{tmpdir_path}/second", n_buckets=8, salt_chunks=None)
     assert engine2.driver._resolve_salt_chunks(None, None, None, "url") is None
 
 

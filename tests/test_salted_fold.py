@@ -129,11 +129,9 @@ def test_hybrid_hot_key_fold_identical_to_plain(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_auto_probe_returns_hot_key_list(spark):
+def test_auto_probe_returns_hot_key_list(spark, tmpdir_path):
     """The auto probe on a hot workload returns (chunks, [hot keys...])
     containing the hot url; on a uniform workload it returns None."""
-    import tempfile
-
     from logminer_kafka_connect_spark.sources.generator import CdcGenerator
 
     # share must clear max(AUTO_SALT_SHARE, 1.25/P) — P=4 in the test
@@ -143,7 +141,7 @@ def test_auto_probe_returns_hot_key_list(spark):
                         hot_urls=1, hot_frac=0.5, avg_changes=4.0,
                         html_paragraphs=1)
     )
-    d = tempfile.mkdtemp(prefix="lmkc-probe-")
+    d = tmpdir_path
     hot_gen.events_df(spark).write.mode("overwrite").parquet(f"{d}/ev")
     engine = CdcEngine(spark, f"{d}/wd", n_buckets=4)
     events = spark.read.parquet(f"{d}/ev")

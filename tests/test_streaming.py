@@ -31,11 +31,22 @@ def _write_event_log(spark, gen, path, n_files=6):
         os.utime(os.path.join(path, f), (now + i, now + i))
 
 
-def test_streaming_available_now(spark, tmpdir_path):
+def test_streaming_available_now(spark, tmpdir_path, monkeypatch):
+    """Also pins the stream path's fused reassembly+parse: a log with CSF
+    chunks, written in SCN order, lands without the reassemble_csf
+    fallback."""
+    from logminer_kafka_connect_spark.operators import consolidate as consolidate_mod
+
     cfg = GeneratorConfig(seed=37, n_txns=80, n_urls=120, n_snapshot=40)
     gen = CdcGenerator(cfg)
+    assert gen.events_pdf()["csf"].any(), "fixture must carry CSF chunks"
     events_path = os.path.join(tmpdir_path, "events")
     _write_event_log(spark, gen, events_path)
+    fallbacks = []
+    real = consolidate_mod.reassemble_csf
+    monkeypatch.setattr(
+        consolidate_mod, "reassemble_csf", lambda df: fallbacks.append(1) or real(df)
+    )
 
     engine = CdcEngine(spark, tmpdir_path, n_buckets=8)
     engine.load_snapshot(spark.createDataFrame(gen.snapshot_pdf()), snapshot_scn=SCN0 - 1)
@@ -50,6 +61,7 @@ def test_streaming_available_now(spark, tmpdir_path):
     _assert_state_equal(
         engine.state().toPandas(), gen.expected_final_state(include_snapshot=True)
     )
+    assert fallbacks == []
 
 
 def test_streaming_restart_from_checkpoint(spark, tmpdir_path):
