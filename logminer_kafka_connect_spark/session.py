@@ -59,7 +59,14 @@ def get_spark(
         # +17% at local[2], +13% at local[32] (BENCH notes). This is also
         # the scaling-efficiency lever: GC pause time grows with thread
         # count under ParallelGC, taxing exactly the high-parallelism level.
-        .config("spark.driver.extraJavaOptions", "-XX:+UseG1GC")
+        # NewRatio=3 fixes the young generation at a quarter of the heap.
+        # G1's pause-time sizing grows it until the whole heap has been
+        # allocated into once, and a run whose allocation stops short of
+        # that leaves a resident heap that depends on when each collection
+        # fell: 2.2-3.1 GB of a 3 GB heap over repeated identical replays.
+        # With a fixed nursery the heap the driver touches is the nursery
+        # plus what survives (1.89-2.01 GB over the same replays).
+        .config("spark.driver.extraJavaOptions", "-XX:+UseG1GC -XX:NewRatio=3")
         .config("spark.ui.enabled", "false")
         # the CDC payload is html/text: zstd shrinks shuffle + parquet bytes
         # ~2x vs lz4/snappy — the pipeline's non-scaling cost is disk IO,
