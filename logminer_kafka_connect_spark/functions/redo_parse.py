@@ -28,7 +28,6 @@ from datetime import datetime, timezone
 from zoneinfo import ZoneInfo
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -511,11 +510,6 @@ def with_parsed_images(df, sql_col: str = "sql_redo", db_timezone: str = "UTC"):
         .withColumn("parse_error", F.col("__parsed.parse_error"))
         .drop("__parsed")
     )
-
-
-def set_cols_expr(img: Column) -> Column:
-    """Explicitly-set column names of an image (drives partial-update MERGE)."""
-    return F.map_keys(img)
 
 
 # ---------------------------------------------------------------------------

@@ -16,7 +16,6 @@ Documented deviations from the reference:
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -106,16 +105,6 @@ def decode_literal(col: Column, data_type: T.DataType) -> Column:
     if isinstance(data_type, T.StringType):
         return col
     return col.cast(data_type)
-
-
-@dataclass
-class ColumnSpec:
-    name: str
-    oracle_type: str
-
-    @property
-    def spark_type(self) -> T.DataType:
-        return oracle_to_spark_type(self.oracle_type)
 
 
 def decode_image_map(img: Column, fields: list[T.StructField]) -> list[Column]:

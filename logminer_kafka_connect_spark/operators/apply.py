@@ -30,8 +30,6 @@ from pyspark.sql import types as T
 
 from logminer_kafka_connect_spark.functions.redo_parse import with_parsed_images
 from logminer_kafka_connect_spark.functions.text_extract import extract_text_udf
-from logminer_kafka_connect_spark.functions.types import decode_literal
-from logminer_kafka_connect_spark.operators.dedup import net_effect
 from logminer_kafka_connect_spark.plans.lakehouse import OP_COL, SET_COLS_COL
 
 # pages-table columns that are *derived*, not carried in redo SQL
@@ -39,62 +37,12 @@ DERIVED_TEXT_COL = "text"
 HTML_SOURCE_COL = "html"
 
 
-def parse_committed(
-    committed: DataFrame, ensure_distribution: bool = False, db_timezone: str = "UTC"
-) -> DataFrame:
-    """P2/P3 over committed changes; parse failures are split out by the
+def parse_committed(committed: DataFrame, db_timezone: str = "UTC") -> DataFrame:
+    """P2/P3 over committed changes into ``before``/``after`` string maps
+    (the change envelope's images); parse failures are split out by the
     caller via ``parse_error`` (reference skips + logs,
     ``TransactionConsolidator.kt:66-69``)."""
-    if ensure_distribution:
-        committed = committed.repartition(F.col("scn"), F.col("row_id"))
     return with_parsed_images(committed, db_timezone=db_timezone)
-
-
-def build_merge_source(
-    parsed: DataFrame,
-    schema: T.StructType,
-    key_col: str = "url",
-) -> DataFrame:
-    """Net-effect fold + typed projection -> SnapshotTable.merge contract.
-
-    Output: table columns (typed) + ``__op`` ('u'|'d') + ``__set_cols``
-    (null = full-row image -> replace; else only those columns are applied,
-    the rest keep the target value — P4 enrichment semantics with explicit
-    NULLs preserved, ``issues/Issue14Test.kt``).
-    """
-    net = net_effect(parsed, key_col=key_col)
-    img = F.col("__net.img")
-    deleted = F.col("__net.deleted")
-    fresh = F.col("__net.fresh")
-
-    has_html = F.map_contains_key(img, F.lit(HTML_SOURCE_COL.upper()))
-
-    cols: list[Column] = []
-    for field in schema.fields:
-        if field.name == key_col:
-            cols.append(F.col(key_col).cast(field.dataType).alias(field.name))
-        elif field.name == DERIVED_TEXT_COL:
-            # P5: recompute text whenever the image carries html
-            text = F.when(
-                has_html,
-                extract_text_udf(F.unhex(F.try_element_at(img, F.lit(HTML_SOURCE_COL.upper())))),
-            ).otherwise(F.lit(None).cast("string"))
-            cols.append(text.alias(field.name))
-        else:
-            raw = F.try_element_at(img, F.lit(field.name.upper()))
-            cols.append(decode_literal(raw, field.dataType).alias(field.name))
-
-    set_cols = F.when(deleted | fresh, F.lit(None).cast("array<string>")).otherwise(
-        F.when(
-            has_html,
-            F.array_union(
-                F.transform(F.map_keys(img), lambda c: F.lower(c)),
-                F.array(F.lit(DERIVED_TEXT_COL)),
-            ),
-        ).otherwise(F.transform(F.map_keys(img), lambda c: F.lower(c)))
-    )
-    op = F.when(deleted, F.lit("d")).otherwise(F.lit("u"))
-    return net.select(*cols, op.alias(OP_COL), set_cols.alias(SET_COLS_COL))
 
 
 class _LineageAccParam:
@@ -213,8 +161,13 @@ def build_merge_source_typed(
     salt_chunks: int | tuple | None = None,
     scn_bounds: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Typed net-effect -> SnapshotTable.merge contract (same semantics as
-    ``build_merge_source``; casts/extraction run on net rows only).
+    """Net-effect fold + typed projection -> SnapshotTable.merge contract.
+
+    Output: table columns (typed) + ``__op`` ('u'|'d') + ``__set_cols``
+    (null = full-row image -> replace; else only those columns are applied,
+    the rest keep the target value — P4 enrichment semantics with explicit
+    NULLs preserved, ``issues/Issue14Test.kt``). Casts and text extraction
+    run on net rows only.
     ``salt_chunks``/``scn_bounds`` switch on the salted hot-key partial
     fold (C11; see operators.dedup)."""
     from logminer_kafka_connect_spark.operators.dedup import net_effect_typed

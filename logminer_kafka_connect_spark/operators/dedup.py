@@ -17,13 +17,12 @@ update that sets different columns. So the per-key reduction is an ordered
 
 Entirely JVM-side: one hash aggregation by key, ``array_sort`` by
 ``(commit_scn, scn, row_id)`` (the apply order — the Spark replacement for
-"read in SCN order, later row wins"), then ``aggregate`` (fold). The image
-travels as a JSON string inside the sorted struct (maps are not orderable
-in Spark) and is decoded by ``from_json`` *inside* the fold lambda.
+"read in SCN order, later row wins"), then ``aggregate`` (fold) over the
+typed images the parse UDF emits (``net_effect_typed``).
 
-The overlay is associative, so at extreme per-key skew this fold can be
-split into salted partial folds over scn sub-ranges and re-folded (noted
-for the 100 TB path; AQE skew handling covers the realistic case).
+The overlay is associative, so at extreme per-key skew this fold is split
+into salted partial folds over scn sub-ranges and re-folded
+(``salted_partials``/``combine_partials``).
 """
 
 from __future__ import annotations
@@ -31,39 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from logminer_kafka_connect_spark.sources.events import OP_DELETE, OP_INSERT, OP_UPDATE
-
-# Fold accumulator / element types
-_ACC0 = (
-    "named_struct('started', false, 'deleted', false, 'fresh', false, "
-    "'img', cast(map() as map<string,string>))"
-)
-
-_FOLD = f"""
-aggregate(
-  __evs,
-  {_ACC0},
-  (acc, e) -> CASE
-    WHEN e.op_code = {OP_INSERT} THEN named_struct(
-      'started', true, 'deleted', false, 'fresh', true,
-      'img', coalesce(from_json(e.after_json, 'map<string,string>'),
-                      cast(map() as map<string,string>)))
-    WHEN e.op_code = {OP_DELETE} THEN named_struct(
-      'started', true, 'deleted', true, 'fresh', false,
-      'img', cast(map() as map<string,string>))
-    ELSE named_struct(
-      'started', true, 'deleted', false,
-      'fresh', CASE WHEN acc.deleted THEN true
-                    WHEN acc.started THEN acc.fresh
-                    ELSE false END,
-      'img', map_concat(
-         CASE WHEN acc.deleted THEN cast(map() as map<string,string>) ELSE acc.img END,
-         coalesce(from_json(e.after_json, 'map<string,string>'),
-                  cast(map() as map<string,string>))))
-  END
-)
-"""
-
+from logminer_kafka_connect_spark.sources.events import OP_DELETE, OP_INSERT
 
 def key_expr(key_col_upper: str):
     """F9 — key from after (INSERT) or before (UPDATE/DELETE)
@@ -295,28 +262,5 @@ def combine_partials(parts: DataFrame, fields, key_col: str) -> DataFrame:
         parts.groupBy(key_col)
         .agg(ordered.alias("__parts"))
         .withColumn("__net", F.expr(combine))
-        .select(key_col, "__net")
-    )
-
-
-def net_effect(parsed: DataFrame, key_col: str = "url") -> DataFrame:
-    """Reduce parsed committed changes to one net-effect row per key.
-
-    Input: one row per change with ``commit_scn, scn, row_id, op_code`` and
-    ``before``/``after`` as ``map<string,string>`` plus ``after_json`` (the
-    raw JSON image from the parse UDF).
-
-    Output: ``key_col, __net`` where ``__net`` =
-    ``struct(deleted boolean, fresh boolean, img map<string,string>)``.
-    """
-    ku = key_col.upper()
-    keyed = parsed.withColumn(key_col, key_expr(ku)).filter(F.col(key_col).isNotNull())
-    evs = F.array_sort(
-        F.collect_list(F.struct("commit_scn", "scn", "row_id", "op_code", "after_json"))
-    )
-    return (
-        keyed.groupBy(key_col)
-        .agg(evs.alias("__evs"))
-        .withColumn("__net", F.expr(_FOLD))
         .select(key_col, "__net")
     )

@@ -81,9 +81,3 @@ def load_snapshot(
         "chunks_applied": sum(applied_chunks),
         "table_version": table.current_version(),
     }
-
-
-def snapshot_records(table: SnapshotTable, spark, version: int | None = None) -> DataFrame:
-    """S2 as a *source*: emit a table version as ``op='r'`` CDC records
-    (for consumers that want the envelope stream rather than the table)."""
-    return table.read(spark, version=version).withColumn("op", F.lit("r"))

@@ -14,14 +14,23 @@ applied to the table *between* the batch that ends at the DDL's SCN and the
 first batch after it, so every merge runs against the schema its events
 were produced under.
 
-Two front-ends share ``process_range``:
+Two front-ends, one batch body:
 - ``replay()``: bounded replay over a static event log (deterministic
-  ranges; this is what the benchmark drives).
+  ranges; ``process_range`` per range).
 - ``run_streaming()``: Structured Streaming ``readStream`` over the event
   directory with ``foreachBatch`` — each trigger derives its commit range
   from the markers it contains and re-scans the log for member changes
   (T2: uncommitted rows naturally wait for the trigger that sees their
-  COMMIT). Checkpointing is the streaming WAL + the lineage table.
+  COMMIT; ``process_markers`` per DDL-free segment). Checkpointing is the
+  streaming WAL + the lineage table.
+
+``process_range`` and ``process_markers`` do the batch bookkeeping
+(idempotence guard, watermark, lineage record) for both drivers and hand
+the batch to one per-batch apply step, ``_apply_batch``: the single-table
+driver applies to its table; ``MultiTableReplayDriver`` consolidates once
+and applies every table's slice. Each table is applied in one optimistic
+pass (``_apply_to_table_inner``); the parse-error slow path runs only when
+that pass saw errors.
 """
 
 from __future__ import annotations
@@ -32,12 +41,14 @@ import re
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from logminer_kafka_connect_spark.functions.redo_parse import is_csf_contiguity_failure
 from logminer_kafka_connect_spark.operators.apply import (
     build_merge_source_typed,
+    lineage_rows_from_acc,
+    make_lineage_accumulator,
     parse_committed_typed,
     partition_lineage,
 )
@@ -85,8 +96,6 @@ class ReplayDriver:
         selectors: list[TableSelector],
         key_col: str = "url",
         db_timezone: str = "UTC",
-        track_parse_errors: bool = True,
-        track_partition_lineage: bool = True,
         track_watermark: bool = True,
         schema_provider=None,
         quarantine_dir: str | None = None,
@@ -97,8 +106,6 @@ class ReplayDriver:
         self.selectors = selectors
         self.key_col = key_col
         self.db_timezone = db_timezone
-        self.track_parse_errors = track_parse_errors
-        self.track_partition_lineage = track_partition_lineage
         self.track_watermark = track_watermark
         # T9 lazy refresh: on a schema-miss (redo SQL references a column the
         # table doesn't know — e.g. the ALTER was unparseable or lost), the
@@ -138,9 +145,9 @@ class ReplayDriver:
         # Exchange (644 MB/batch at bench scale). Relies on the redo-log
         # source contract that a CSF group's chunks are consecutive rows
         # (LogminerFetcher.kt:144-153); violated -> CsfContiguityError ->
-        # _apply_consolidated retries the batch through the exchange path
-        # automatically. LMKC_FUSED=0 disables (A/B knob).
-        self.fused_parse = os.environ.get("LMKC_FUSED", "1") != "0"
+        # _apply_batch retries the batch through the exchange path
+        # automatically.
+        self.fused_parse = True
 
     # ------------------------------------------------------ auto salting
     #: single-key share of the sampled batch at which the salted fold kicks in
@@ -384,170 +391,149 @@ class ReplayDriver:
         salt_chunks: int | tuple | None = None,
         raw_chunks: bool = False,
     ) -> tuple[int, int, int, list[dict] | None]:
+        """One optimistic pass: parse -> fold -> MERGE as a single job that
+        also gathers the batch's A7 per-partition lineage (an accumulator
+        inside the parse UDF) and its parse-error count (an Observation).
+        The count is checked after the write job but before the atomic
+        manifest swap (``merge(pre_commit_check=...)``); only when it is
+        non-zero is the staged commit discarded and the batch re-applied
+        through ``_apply_slow_path``."""
         scn_hi = scn_bounds[1] if scn_bounds is not None else None
         if table.is_applied(batch_id, scn_hi=scn_hi):
             return 0, 0, 0, None
-        n_parse_errors = 0
-        n_quarantined = 0
-        part_rows = None
         schema = table.schema()
-        # keep_sql whenever the tracked abort path could quarantine from
-        # this plan (lazy — only ever evaluated on that rare path); the
-        # untracked path re-parses with keep_sql=True separately
+        lineage_acc = make_lineage_accumulator(self.spark)
+        err_obs = Observation()
         parsed = parse_committed_typed(
             committed, schema, key_col=key_col,
-            db_timezone=self.db_timezone,
-            keep_sql=self.track_parse_errors or self.track_partition_lineage,
-            raw_chunks=raw_chunks,
+            db_timezone=self.db_timezone, keep_sql=False,
+            lineage_acc=lineage_acc, raw_chunks=raw_chunks,
+        ).observe(err_obs, F.count(F.col("parse_error")).alias("n_err"))
+        source = build_merge_source_typed(
+            parsed.filter(F.col("parse_error").isNull()), schema, key_col=key_col,
+            salt_chunks=salt_chunks, scn_bounds=scn_bounds,
         )
-        if self.track_parse_errors or self.track_partition_lineage:
-            # Optimistic single-pass tracked mode. The r2 design persisted
-            # the full parsed batch (multi-KB typed images + kept raw SQL)
-            # to count errors before merging — measured ~2x the untracked
-            # ceiling at 8 cores (147.9s vs 72.2s on the 2.9M-event input).
-            # Production mode now pays almost nothing over the ceiling:
-            #  - A7 per-partition lineage: an accumulator updated inside
-            #    the merge job's own parse UDF (operators/apply.py
-            #    make_lineage_accumulator) — ZERO extra jobs. The r3 design
-            #    ran a second narrow job over `committed` that re-executed
-            #    the consolidation joins (~8s/batch at bench scale;
-            #    r3 VERDICT Next #3).
-            #  - parse-error count: an Observation inside the merge job
-            #    itself, checked AFTER the write job but BEFORE the atomic
-            #    manifest swap (merge(pre_commit_check=...)) — on errors
-            #    the staged commit is discarded and the r2 persist/refresh/
-            #    quarantine machinery below runs as the rare slow path.
-            from pyspark.sql import Observation
-
-            from logminer_kafka_connect_spark.operators.apply import (
-                lineage_rows_from_acc,
-                make_lineage_accumulator,
+        stats = table.merge(
+            self.spark, source, batch_id=batch_id,
+            prune_buckets=self.prune_buckets, scn_hi=scn_hi,
+            pre_commit_check=lambda: int(err_obs.get["n_err"]) == 0,
+        )
+        if not stats.applied:
+            return self._apply_slow_path(
+                committed, batch_id, table, key_col, scn_bounds,
+                quarantine_key, salt_chunks, raw_chunks,
             )
+        part_rows = [
+            {"partition_id": pid, "scn_min": mn, "scn_max": mx, "n_rows": n}
+            for pid, mn, mx, n in lineage_rows_from_acc(lineage_acc.value)
+        ]
+        return stats.source_rows, 0, 0, part_rows
 
-            ok = F.col("parse_error").isNull()
-            lineage_acc = (
-                make_lineage_accumulator(self.spark)
-                if self.track_partition_lineage
-                else None
-            )
-            err_obs = Observation()
-            narrow = parse_committed_typed(
+    def _apply_slow_path(
+        self,
+        committed: DataFrame,
+        batch_id: str,
+        table: SnapshotTable,
+        key_col: str,
+        scn_bounds: tuple[int, int] | None,
+        quarantine_key: str | None,
+        salt_chunks: int | tuple | None,
+        raw_chunks: bool,
+    ) -> tuple[int, int, int, list[dict] | None]:
+        """The batch had parse errors: count them, try the lazy schema
+        refresh and re-parse (the reference's refresh-and-retry,
+        ``TransactionConsolidator.kt:79-89``), route the rows that still
+        fail to the dead-letter table with their redo SQL (T9: never
+        silently dropped), and merge the good rows."""
+        def parse(schema):
+            return parse_committed_typed(
                 committed, schema, key_col=key_col,
-                db_timezone=self.db_timezone, keep_sql=False,
-                lineage_acc=lineage_acc, raw_chunks=raw_chunks,
-            ).observe(err_obs, F.count(F.col("parse_error")).alias("n_err"))
+                db_timezone=self.db_timezone, keep_sql=True,
+                raw_chunks=raw_chunks,
+            ).persist()
+
+        failed = F.col("parse_error").isNotNull()
+        schema = table.schema()
+        parsed = parse(schema)
+        n_parse_errors = parsed.filter(failed).count()
+        if n_parse_errors and self._resolve_schema_misses(parsed, table):
+            parsed.unpersist()
+            schema = table.schema()
+            parsed = parse(schema)
+            n_parse_errors = parsed.filter(failed).count()
+        try:
+            n_quarantined = (
+                self._quarantine(parsed.filter(failed), quarantine_key or batch_id)
+                if n_parse_errors
+                else 0
+            )
+            good = parsed.filter(~failed)
+            part_rows = partition_lineage(good)
             source = build_merge_source_typed(
-                narrow.filter(ok), schema, key_col=key_col,
+                good, schema, key_col=key_col,
                 salt_chunks=salt_chunks, scn_bounds=scn_bounds,
             )
             stats = table.merge(
                 self.spark, source, batch_id=batch_id,
-                prune_buckets=self.prune_buckets, scn_hi=scn_hi,
-                pre_commit_check=lambda: int(err_obs.get["n_err"]) == 0,
+                prune_buckets=self.prune_buckets,
+                scn_hi=scn_bounds[1] if scn_bounds is not None else None,
             )
-            if stats.applied:
-                if lineage_acc is not None:
-                    part_rows = [
-                        {"partition_id": pid, "scn_min": mn, "scn_max": mx, "n_rows": n}
-                        for pid, mn, mx, n in lineage_rows_from_acc(lineage_acc.value)
-                    ]
-                return stats.source_rows, 0, 0, part_rows
-            # aborted: parse errors present -> the full r2 slow path. The
-            # error count and the dead-letter write run regardless of which
-            # tracking flag got us here — with lineage on but error stats
-            # off, the failing rows must still be quarantined, never
-            # silently dropped (T9; r3 ADVICE).
-            parsed = parsed.persist()
-            n_parse_errors = parsed.filter(F.col("parse_error").isNotNull()).count()
-            if n_parse_errors and self._resolve_schema_misses(parsed, table):
-                # lazy schema refresh succeeded — re-parse the batch
-                # against the evolved schema (the reference's
-                # refresh-and-retry, TransactionConsolidator.kt:79-89)
-                parsed.unpersist()
-                schema = table.schema()
-                parsed = parse_committed_typed(
-                    committed, schema, key_col=key_col,
-                    db_timezone=self.db_timezone, keep_sql=True,
-                    raw_chunks=raw_chunks,
-                ).persist()
-                n_parse_errors = parsed.filter(
-                    F.col("parse_error").isNotNull()
-                ).count()
-            if n_parse_errors:
-                n_quarantined = self._quarantine(
-                    parsed.filter(F.col("parse_error").isNotNull()),
-                    quarantine_key or batch_id,
-                )
-            good = parsed.filter(F.col("parse_error").isNull())
-            if self.track_partition_lineage:
-                part_rows = partition_lineage(good)
-            err_obs = None
-        else:
-            # Stats tracking is off, but the 'never silently dropped'
-            # guarantee (T9) must still hold: observe the parse-error count
-            # as a metric of the merge job itself — zero extra actions in
-            # the (overwhelmingly common) clean case; the dead-letter write
-            # runs only when errors were actually seen (r2 ADVICE: the
-            # quarantine must not be coupled to the stats flag). The lazy
-            # schema-refresh-and-retry still requires track_parse_errors
-            # (errors must be known *before* the merge to re-parse); here
-            # the affected rows land in quarantine instead — loud and
-            # replayable, never silently dropped.
-            from pyspark.sql import Observation
-
-            err_obs = None
-            if self.quarantine_dir:
-                err_obs = Observation()
-                parsed = parsed.observe(
-                    err_obs, F.count(F.col("parse_error")).alias("n_err")
-                )
-            good = parsed.filter(F.col("parse_error").isNull())
-
-        source = build_merge_source_typed(
-            good, schema, key_col=key_col,
-            salt_chunks=salt_chunks, scn_bounds=scn_bounds,
-        )
-        stats = table.merge(
-            self.spark, source, batch_id=batch_id, prune_buckets=self.prune_buckets,
-            scn_hi=scn_hi,
-        )
-        if self.track_parse_errors or self.track_partition_lineage:
+        finally:
             parsed.unpersist()
-        elif err_obs is not None and stats.applied and int(err_obs.get["n_err"]) > 0:
-            n_parse_errors = int(err_obs.get["n_err"])
-            # rare path: re-parse keeping the raw SQL and route the failing
-            # rows to the dead-letter table (extra job only when errors
-            # actually occurred)
-            failing = parse_committed_typed(
-                committed, schema, key_col=key_col,
-                db_timezone=self.db_timezone, keep_sql=True,
-                raw_chunks=raw_chunks,
-            ).filter(F.col("parse_error").isNotNull())
-            n_quarantined = self._quarantine(failing, quarantine_key or batch_id)
         return stats.source_rows, n_parse_errors, n_quarantined, part_rows
 
-    def _apply_consolidated(
-        self, consolidate_fn, batch_id: str, fused: bool, **kw
-    ) -> tuple[int, int, int, list[dict] | None]:
-        """Apply one batch to ``self.table``. ``consolidate_fn(reassemble)``
-        builds the batch's committed changes; ``fused`` takes the fused
-        reassembly+parse, which falls back to the exchange-based
-        ``reassemble_csf`` when the source breaks its contiguity contract.
-        Nothing was committed by the failed attempt (the MERGE manifest
-        swap is atomic and the parse failed before it), so the retry
-        recomputes from scratch under the same batch id."""
+    def _apply_batch(
+        self,
+        consolidate_fn,
+        batch_id: str,
+        fused: bool,
+        scn_bounds: tuple[int, int] | None,
+        salt_for,
+    ) -> tuple[int, int, int, list[dict] | None, dict]:
+        """The per-batch apply step of ``process_range``/``process_markers``:
+        apply one batch to ``self.table``. ``consolidate_fn(reassemble)``
+        builds the batch's committed changes; ``salt_for(key_col)`` gives
+        the fold's salting. ``fused`` takes the fused reassembly+parse,
+        which falls back to the exchange-based ``reassemble_csf`` when the
+        source breaks its contiguity contract. Nothing was committed by the
+        failed attempt (the MERGE manifest swap is atomic and the parse
+        failed before it), so the retry recomputes from scratch under the
+        same batch id. Returns the counts, the ``partitions`` rows and the
+        driver's extra batch-record fields."""
+        salt = salt_for(self.key_col)
+        kw = dict(scn_bounds=scn_bounds, salt_chunks=salt)
         if fused:
             try:
-                return self._apply_to_table(
+                return *self._apply_to_table(
                     consolidate_fn(False), batch_id, self.table, self.key_col,
                     raw_chunks=True, **kw,
-                )
+                ), {}
             except Exception as e:
                 if not is_csf_contiguity_failure(e):
                     raise
-        return self._apply_to_table(
+        return *self._apply_to_table(
             consolidate_fn(True), batch_id, self.table, self.key_col, **kw
-        )
+        ), {}
+
+    def _record_batch(self, batch_id: str, t0: float, scn_span, result, **fields) -> dict:
+        """Write one batch's lineage record (both front ends, both
+        drivers) and return it."""
+        n_changes, n_parse_errors, n_quarantined, part_rows, extra = result
+        record = {
+            "batch_id": batch_id,
+            "scn_lo": scn_span[0],
+            "scn_hi": scn_span[1],
+            **fields,
+            "n_net_rows": n_changes,
+            "n_parse_errors": n_parse_errors,
+            "n_quarantined": n_quarantined,
+            **extra,
+            "table_version": self.table.current_version(),
+            "wall_s": round(time.time() - t0, 3),
+            "partitions": part_rows,
+        }
+        self.lineage.record_batch(record)
+        return record
 
     def process_range(
         self,
@@ -563,11 +549,11 @@ class ReplayDriver:
             return {"batch_id": batch_id, "skipped": True}
         t0 = time.time()
 
-        salt = (
-            self._resolve_salt_chunks(events, hi, change_lo, self.key_col)
-            if salt_override == "unset"
-            else salt_override
-        )
+        def salt_for(key_col: str):
+            if salt_override != "unset":
+                return salt_override
+            return self._resolve_salt_chunks(events, hi, change_lo, key_col)
+
         # The open-txn watermark scans the immutable input log — nothing it
         # reads depends on the merge, and nothing the merge reads depends on
         # it; only the lineage record (written last) needs its result. Run
@@ -589,12 +575,12 @@ class ReplayDriver:
         fused = self.fused_parse and (
             marker_count_hint is None or marker_count_hint < BROADCAST_MARKER_LIMIT
         )
-        n_changes, n_parse_errors, n_quarantined, part_rows = self._apply_consolidated(
+        result = self._apply_batch(
             lambda reassemble: consolidate(
                 events, self.selectors, lo, hi, change_lo=change_lo,
                 marker_count_hint=marker_count_hint, reassemble=reassemble,
             ),
-            batch_id, fused, scn_bounds=(lo, hi), salt_chunks=salt,
+            batch_id, fused, (lo, hi), salt_for,
         )
 
         if wm_fut is not None:
@@ -603,22 +589,12 @@ class ReplayDriver:
         else:
             # resume falls back to a full change re-scan (correct, slower)
             watermark, n_open, resume_change_lo = None, -1, None
-        record = {
-            "batch_id": batch_id,
-            "scn_lo": lo,
-            "scn_hi": hi,
-            "commit_watermark": watermark,
-            "resume_change_lo": resume_change_lo,
-            "n_open_changes": n_open,
-            "n_net_rows": n_changes,
-            "n_parse_errors": n_parse_errors,
-            "n_quarantined": n_quarantined,
-            "table_version": self.table.current_version(),
-            "wall_s": round(time.time() - t0, 3),
-            "partitions": part_rows,
-        }
-        self.lineage.record_batch(record)
-        return record
+        return self._record_batch(
+            batch_id, t0, (lo, hi), result,
+            commit_watermark=watermark,
+            resume_change_lo=resume_change_lo,
+            n_open_changes=n_open,
+        )
 
     # ------------------------------------------------------- bounded replay
     def plan_ranges(self, events: DataFrame, n_batches: int, start_scn: int | None = None) -> tuple[list[tuple[int, int]], dict[int, DdlEvent], int]:
@@ -859,31 +835,20 @@ class ReplayDriver:
         ``markers`` (streaming path — exactly-once per marker, since the
         file source delivers each event file exactly once per checkpoint).
         ``scn_span`` is the markers' ``(min, max)`` SCN, which the trigger
-        already aggregated."""
+        already aggregated. No skew probe runs per trigger: an explicit
+        ``salt_chunks`` count is honoured, ``"auto"`` folds unsalted."""
         if batch_id in self.lineage.applied_batch_ids():
             return {"batch_id": batch_id, "skipped": True}
         t0 = time.time()
-        n_changes, n_parse_errors, n_quarantined, part_rows = self._apply_consolidated(
+        result = self._apply_batch(
             lambda reassemble: consolidate_with_markers(
                 full_log, self.selectors, markers, commit_hi, reassemble=reassemble
             ),
-            batch_id, self.fused_parse,
+            batch_id, self.fused_parse, None,
+            lambda key_col: None if self.salt_chunks == "auto" else self.salt_chunks,
         )
         self._maybe_compact()
-        record = {
-            "batch_id": batch_id,
-            "scn_lo": scn_span[0],
-            "scn_hi": scn_span[1],
-            "commit_watermark": None,
-            "n_net_rows": n_changes,
-            "n_parse_errors": n_parse_errors,
-            "n_quarantined": n_quarantined,
-            "table_version": self.table.current_version(),
-            "wall_s": round(time.time() - t0, 3),
-            "partitions": part_rows,
-        }
-        self.lineage.record_batch(record)
-        return record
+        return self._record_batch(batch_id, t0, scn_span, result, commit_watermark=None)
 
     def run_streaming(
         self,
@@ -964,14 +929,19 @@ class MultiTableReplayDriver(ReplayDriver):
     (``SourceTask.kt:46-63``, ``SchemaService.kt:34-36``,
     ``SourceDatabaseNameService.kt:20-27``).
 
-    Scale shape: the log is scanned + consolidated ONCE per microbatch
-    (selector union pushed into the scan); the committed set is persisted
+    It shares ``ReplayDriver``'s body — ``replay``/``run_streaming`` and
+    ``process_range``/``process_markers`` with their batch records — and
+    overrides only the per-batch apply step, ``_apply_batch``: the log is
+    scanned + consolidated ONCE per microbatch (selector union pushed into
+    the scan, exchange-based reassembly); the committed set is persisted
     and each table's slice runs parse -> fold -> MERGE against its own
-    schema/bucketing. DDL events route to their target table via the
-    record's segment fields. Lineage carries per-table stats in one batch
-    record, so crash-resume skips the whole batch only when every table
-    committed it (per-table merges are individually idempotent by
-    batch_id, so a partial crash re-applies only the missing tables).
+    schema/bucketing; the step returns the summed counts plus the record's
+    per-table ``tables`` field. DDL events route to their target table via
+    the record's segment fields. Crash-resume skips the whole batch only
+    when every table committed it (per-table merges are individually
+    idempotent by batch_id, so a partial crash re-applies only the missing
+    tables). Skew is probed per table (each binding has its own key
+    column), not once per ``replay()`` call.
 
     Per-table apply is **concurrent** (VERDICT r2 Missing #3): the N
     parse -> fold -> MERGE pipelines are submitted from a thread pool, each
@@ -996,10 +966,26 @@ class MultiTableReplayDriver(ReplayDriver):
         self.max_concurrent_tables = 4
         self._replay_salt_probe = False  # per-table probes in _apply_tables
 
+    def _apply_batch(
+        self,
+        consolidate_fn,
+        batch_id: str,
+        fused: bool,
+        scn_bounds: tuple[int, int] | None,
+        salt_for,
+    ) -> tuple[int, int, int, list[dict] | None, dict]:
+        """Consolidate the batch once for every table (the exchange-based
+        reassembly: ``fused`` is not taken here), persist it, and run each
+        binding's slice through ``_apply_tables``."""
+        committed = consolidate_fn(True).persist()
+        try:
+            return self._apply_tables(committed, batch_id, scn_bounds, salt_for)
+        finally:
+            committed.unpersist()
+
     def _apply_tables(
-        self, committed: DataFrame, batch_id: str, lo_hi, events: DataFrame | None,
-        change_lo: int | None = None,
-    ) -> tuple[dict[str, dict], int, int, int, list[dict] | None]:
+        self, committed: DataFrame, batch_id: str, scn_bounds, salt_for
+    ) -> tuple[int, int, int, list[dict] | None, dict]:
         """Run every binding's parse->fold->MERGE over its slice of the
         consolidated batch — concurrently when enabled. Results keyed and
         aggregated in binding order (deterministic regardless of completion
@@ -1017,19 +1003,14 @@ class MultiTableReplayDriver(ReplayDriver):
                 (F.col("seg_owner") == b.owner)
                 & (F.col("table_name") == b.table_name)
             )
-            salt = (
-                self._resolve_salt_chunks(events, lo_hi[1], change_lo, b.key_col)
-                if (events is not None and lo_hi is not None)
-                else (self.salt_chunks if self.salt_chunks != "auto" else None)
-            )
             return self._apply_to_table(
                 sub,
                 batch_id,
                 b.table,
                 b.key_col,
-                scn_bounds=lo_hi,
+                scn_bounds=scn_bounds,
                 quarantine_key=f"{batch_id}-{b.name}",
-                salt_chunks=salt,
+                salt_chunks=salt_for(b.key_col),
             )
 
         if self.concurrent_tables and len(self.bindings) > 1:
@@ -1055,7 +1036,7 @@ class MultiTableReplayDriver(ReplayDriver):
             n_quarantined += n_q
             if part is not None:
                 part_rows = (part_rows or []) + [dict(r, table=b.name) for r in part]
-        return per_table, n_changes, n_parse_errors, n_quarantined, part_rows
+        return n_changes, n_parse_errors, n_quarantined, part_rows, {"tables": per_table}
 
     def _ddl_target(self, ddl: DdlEvent) -> SnapshotTable:
         for b in self.bindings:
@@ -1064,98 +1045,6 @@ class MultiTableReplayDriver(ReplayDriver):
             ):
                 return b.table
         return self.table
-
-    def process_range(
-        self,
-        events: DataFrame,
-        lo: int,
-        hi: int,
-        change_lo: int | None,
-        marker_count_hint: int | None = None,
-        salt_override: int | None | str = "unset",
-    ) -> dict:
-        # salt_override is accepted for base-class compatibility but
-        # ignored: each binding has its own key column, so the multi-table
-        # driver resolves skew per table in _apply_tables.
-        batch_id = f"cdc-{lo}-{hi}"
-        if batch_id in self.lineage.applied_batch_ids():
-            return {"batch_id": batch_id, "skipped": True}
-        t0 = time.time()
-
-        committed = consolidate(
-            events, self.selectors, lo, hi, change_lo=change_lo,
-            marker_count_hint=marker_count_hint,
-        ).persist()
-        try:
-            per_table, n_changes, n_parse_errors, n_quarantined, part_rows = (
-                self._apply_tables(committed, batch_id, (lo, hi), events, change_lo)
-            )
-        finally:
-            committed.unpersist()
-
-        if self.track_watermark:
-            watermark, n_open = open_txn_watermark(
-                events, self.selectors, hi, change_lo=change_lo
-            )
-            resume_change_lo = watermark if watermark is not None else hi
-        else:
-            watermark, n_open, resume_change_lo = None, -1, None
-        record = {
-            "batch_id": batch_id,
-            "scn_lo": lo,
-            "scn_hi": hi,
-            "commit_watermark": watermark,
-            "resume_change_lo": resume_change_lo,
-            "n_open_changes": n_open,
-            "n_net_rows": n_changes,
-            "n_parse_errors": n_parse_errors,
-            "n_quarantined": n_quarantined,
-            "tables": per_table,
-            "table_version": self.table.current_version(),
-            "wall_s": round(time.time() - t0, 3),
-            "partitions": part_rows,
-        }
-        self.lineage.record_batch(record)
-        return record
-
-    def process_markers(
-        self,
-        full_log: DataFrame,
-        markers: DataFrame,
-        batch_id: str,
-        scn_span: tuple[int, int],
-        commit_hi: int | None = None,
-    ) -> dict:
-        """Streaming trigger for N tables: consolidate the trigger's
-        transactions once, apply each table's slice (same per-table
-        idempotence as process_range)."""
-        if batch_id in self.lineage.applied_batch_ids():
-            return {"batch_id": batch_id, "skipped": True}
-        t0 = time.time()
-        committed = consolidate_with_markers(
-            full_log, self.selectors, markers, commit_hi
-        ).persist()
-        try:
-            per_table, n_changes, n_parse_errors, n_quarantined, part_rows = (
-                self._apply_tables(committed, batch_id, None, None)
-            )
-        finally:
-            committed.unpersist()
-        record = {
-            "batch_id": batch_id,
-            "scn_lo": scn_span[0],
-            "scn_hi": scn_span[1],
-            "commit_watermark": None,
-            "n_net_rows": n_changes,
-            "n_parse_errors": n_parse_errors,
-            "n_quarantined": n_quarantined,
-            "tables": per_table,
-            "table_version": self.table.current_version(),
-            "wall_s": round(time.time() - t0, 3),
-            "partitions": part_rows,
-        }
-        self.lineage.record_batch(record)
-        return record
 
 
 def stream_envelopes(

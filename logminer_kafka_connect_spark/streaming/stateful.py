@@ -1,7 +1,7 @@
 """Stateful streaming CDC compaction (``applyInPandasWithState``).
 
 The batch engine reduces each micro-batch to per-key net effect
-(``operators/dedup.py::net_effect``, A6) and lets the MERGE reconcile
+(``operators/dedup.py::net_effect_typed``, A6) and lets the MERGE reconcile
 across batches. This module is the *streaming-native* composition of the
 same semantics: a per-key latest-wins compactor whose state store carries
 each key's high-water ordering mark across triggers, so downstream

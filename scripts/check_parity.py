@@ -49,18 +49,21 @@ def table_hash(rows: list[tuple], cols: list[str]) -> tuple[str, int]:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs = entry_mod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        sys.exit(f"not declared entries: {' '.join(unknown)}")
+    if only:
+        qs = {name: fn for name, fn in qs.items() if name in only}
 
     spark = get_spark(app_name="parity", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         try:
             sdf = fn(spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]

@@ -19,8 +19,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from logminer_kafka_connect_spark import entry_queries  # noqa: E402
 from logminer_kafka_connect_spark.engine import PAGES_SCHEMA  # noqa: E402
 from logminer_kafka_connect_spark.operators.apply import (  # noqa: E402
-    build_merge_source,
-    parse_committed,
+    build_merge_source_typed,
+    parse_committed_typed,
 )
 from logminer_kafka_connect_spark.operators.consolidate import consolidate  # noqa: E402
 from logminer_kafka_connect_spark.session import get_spark  # noqa: E402
@@ -85,10 +85,12 @@ def main():
 
     gen = CdcGenerator(GeneratorConfig(seed=42, n_txns=50, n_urls=80, n_snapshot=0))
     events = gen.events_df(spark)
-    committed = consolidate(events, [("CRAWL", "PAGES")])
-    parsed = parse_committed(committed).filter(F.col("parse_error").isNull())
-    src = build_merge_source(parsed, PAGES_SCHEMA)
-    print(f"## cdc_merge_source (consolidate -> parse -> fold -> typed)\n\n```\n{explain_str(src)}```\n")
+    # the engine's replay plan: chunk stream -> fused reassembly + typed
+    # parse -> typed net-effect fold -> MERGE source
+    committed = consolidate(events, [("CRAWL", "PAGES")], reassemble=False)
+    parsed = parse_committed_typed(committed, PAGES_SCHEMA, raw_chunks=True)
+    src = build_merge_source_typed(parsed.filter(F.col("parse_error").isNull()), PAGES_SCHEMA)
+    print(f"## cdc_merge_source (consolidate -> fused parse -> fold -> typed)\n\n```\n{explain_str(src)}```\n")
     spark.stop()
 
 

@@ -91,8 +91,6 @@ def main():
     # full merge (write included) against a fresh table
     workdir = tempfile.mkdtemp(prefix="lmkc-prof-")
     engine = CdcEngine(spark, workdir, n_buckets=64)
-    engine.driver.track_parse_errors = False
-    engine.driver.track_partition_lineage = False
     engine.driver.track_watermark = False
     engine.driver.prune_buckets = False
     engine.driver.salt_chunks = None

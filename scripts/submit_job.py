@@ -29,7 +29,7 @@ def main() -> int:
     ap.add_argument("--snapshot-scn", type=int, default=None)
     ap.add_argument("--batches", type=int, default=4)
     ap.add_argument("--n-buckets", type=int, default=16)
-    ap.add_argument("--tracking", action="store_true", help="lineage + parse-error stats")
+    ap.add_argument("--tracking", action="store_true", help="record the open-txn watermark")
     args = ap.parse_args()
 
     # Session comes from spark-submit's conf (master, executors, py-files);
@@ -44,8 +44,6 @@ def main() -> int:
     from logminer_kafka_connect_spark.sources.events import EVENT_SCHEMA
 
     engine = CdcEngine(spark, args.workdir, n_buckets=args.n_buckets)
-    engine.driver.track_parse_errors = args.tracking
-    engine.driver.track_partition_lineage = args.tracking
     engine.driver.track_watermark = args.tracking
 
     if args.snapshot is not None:

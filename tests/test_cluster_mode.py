@@ -91,8 +91,6 @@ def test_replay_under_local_cluster_matches_local_mode(spark, tmpdir_path):
 
     # --- parity vs an in-process local-mode replay of the same log ----------
     ref = CdcEngine(spark, os.path.join(tmpdir_path, "ref"), n_buckets=16)
-    ref.driver.track_parse_errors = True
-    ref.driver.track_partition_lineage = True
     ref.driver.track_watermark = True
     ref.load_snapshot(spark.read.parquet(snap_path), snapshot_scn=SCN0 - 1)
     ref.replay(spark.read.parquet(events_path), n_batches=2)

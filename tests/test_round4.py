@@ -261,30 +261,6 @@ def test_remove_orphan_files_age_gate(spark, tmpdir_path):
     assert t.read(spark).count() == 5  # referenced data untouched
 
 
-# -------------------------------- quarantine independent of stats flags
-
-
-def test_quarantine_with_lineage_only_tracking(spark, tmpdir_path):
-    """ADVICE r3: track_partition_lineage=True + track_parse_errors=False
-    must still quarantine parse failures in the abort slow path (T9:
-    never silently dropped)."""
-    from logminer_kafka_connect_spark.engine import CdcEngine
-    from tests.test_round2 import UNKNOWN_COL_INSERT, _events_df, _schema_miss_rows
-
-    engine = CdcEngine(spark, tmpdir_path, n_buckets=4)
-    engine.driver.track_parse_errors = False
-    engine.driver.track_partition_lineage = True
-    engine.driver.track_watermark = False
-    stats = engine.replay(_events_df(spark, _schema_miss_rows()), n_batches=1)
-    assert stats.n_parse_errors == 1
-    urls = sorted(r["url"] for r in engine.state().select("url").collect())
-    assert urls == ["http://base"]
-    q = spark.read.parquet(os.path.join(tmpdir_path, "quarantine", "batch-*")).toPandas()
-    assert len(q) == 1
-    assert "schema_miss" in q["parse_error"].iloc[0]
-    assert q["sql_redo"].iloc[0] == UNKNOWN_COL_INSERT
-
-
 # ------------------------------------------------ salt probe isolation
 
 
@@ -315,8 +291,6 @@ def test_accumulator_lineage_matches_narrow_job(spark, tmpdir_path):
     gen = CdcGenerator(GeneratorConfig(seed=11, n_txns=200, n_urls=120, n_snapshot=0))
     events = gen.events_df(spark)
     engine = CdcEngine(spark, tmpdir_path, n_buckets=4)
-    engine.driver.track_partition_lineage = True
-    engine.driver.track_parse_errors = True
     engine.replay(events, n_batches=1)
 
     part = engine.lineage.partition_lineage(spark).toPandas()
