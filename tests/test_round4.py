@@ -261,6 +261,31 @@ def test_remove_orphan_files_age_gate(spark, tmpdir_path):
     assert t.read(spark).count() == 5  # referenced data untouched
 
 
+# ------------------------------------------- quarantine with lineage
+
+
+def test_quarantine_with_lineage_only_tracking(spark, tmpdir_path):
+    """ADVICE r3: partition lineage and the dead-letter table both come
+    from the abort slow path when a batch has parse failures: the failed
+    row is quarantined (T9: never silently dropped), and the batch record's
+    partition lineage counts only the good row that was merged."""
+    from logminer_kafka_connect_spark.engine import CdcEngine
+    from tests.test_round2 import UNKNOWN_COL_INSERT, _events_df, _schema_miss_rows
+
+    engine = CdcEngine(spark, tmpdir_path, n_buckets=4)
+    stats = engine.replay(_events_df(spark, _schema_miss_rows()), n_batches=1)
+    assert stats.n_parse_errors == 1
+    urls = sorted(r["url"] for r in engine.state().select("url").collect())
+    assert urls == ["http://base"]
+    q = spark.read.parquet(os.path.join(tmpdir_path, "quarantine", "batch-*")).toPandas()
+    assert len(q) == 1
+    assert "schema_miss" in q["parse_error"].iloc[0]
+    assert q["sql_redo"].iloc[0] == UNKNOWN_COL_INSERT
+    rec = engine.lineage.last_batch()
+    assert rec["n_quarantined"] == 1
+    assert sum(p["n_rows"] for p in rec["partitions"]) == 1
+
+
 # ------------------------------------------------ salt probe isolation
 
 
